@@ -855,11 +855,7 @@ def agg_filter_clause(spark: SparkSession, sf: str) -> DataFrame:
     the DataFrame CASE formulation (both compile to conditional
     aggregate inputs), which the twin ops (``agg_bool_bitwise``
     count_if, ``workload_data_quality``) express the DataFrame way."""
-    from datapipelines_python_spark.catalog import table_path
-
-    spark.read.parquet(table_path(sf, "orders")).createOrReplaceTempView(
-        "_filter_orders"
-    )
+    load_table(spark, sf, "orders").createOrReplaceTempView("_filter_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,

@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datapipelines_python_spark.catalog import load_table
+from datapipelines_python_spark.catalog import (
+    load_table,
+    normalize_events_ts,
+    read_parquet,
+    table_path,
+)
 from datapipelines_python_spark.operators._helpers import spread
 from datapipelines_python_spark.registry import query
 
@@ -183,11 +188,9 @@ def scan_stream_files(spark: SparkSession, sf: str) -> DataFrame:
     full table. (Unbounded variant differs only in the trigger.)
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf.rstrip('/')}/events.parquet").schema
+    raw_schema = read_parquet(spark, table_path(sf, "events")).schema
     # The file stream source wants a directory; glob-filter the sf dir down
     # to the events table file.
-    from datapipelines_python_spark.catalog import normalize_events_ts
-
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

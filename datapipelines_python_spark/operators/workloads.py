@@ -4504,9 +4504,7 @@ def scan_file_metadata(spark: SparkSession, sf: str) -> DataFrame:
     Metadata is constant per file split, so Catalyst treats it like a
     partition column — no per-row cost, no shuffle beyond the file-count
     aggregate."""
-    from datapipelines_python_spark.catalog import table_path
-
-    df = spark.read.parquet(table_path(sf, "lineitem"))
+    df = load_table(spark, sf, "lineitem")
     return df.groupBy(
         F.col("_metadata.file_name").alias("file_name")
     ).agg(

@@ -27,7 +27,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datapipelines_python_spark.catalog import TABLES, load_table
+from datapipelines_python_spark.catalog import (
+    TABLES,
+    load_table,
+    normalize_events_ts,
+    read_parquet,
+    table_path,
+)
 from datapipelines_python_spark.pipeline.common import (
     TYPE_WILDCARD,
     NotFoundError,
@@ -203,7 +209,7 @@ class ParquetCache(TableSource, TableSink):
         if table not in self.provides:
             raise NotFoundError(table)
         spark: SparkSession = context[PipelineContext.Keys.SPARK]
-        return spark.read.parquet(self._path(table))
+        return read_parquet(spark, self._path(table))
 
     def put(self, table: str, df: DataFrame, context: PipelineContext) -> None:
         if not self.can_accept(table):
@@ -242,12 +248,10 @@ class FixtureSource(TableSource):
         if not self.can_provide(table):
             raise UnsupportedError(table)
         spark: SparkSession = context[PipelineContext.Keys.SPARK]
-        from datapipelines_python_spark.catalog import normalize_events_ts
-
         sf = self.sf_dir.rstrip("/")
         if table == "events":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(f"{sf}/{table}.parquet").schema
+        schema = read_parquet(spark, table_path(sf, table)).schema
         stream = (
             spark.readStream.schema(schema)
             .option("pathGlobFilter", f"{table}.parquet")

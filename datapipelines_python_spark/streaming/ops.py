@@ -30,6 +30,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapipelines_python_spark.catalog import load_table, read_parquet
 from datapipelines_python_spark.operators._helpers import sql_dsum
 from datapipelines_python_spark.operators.scans import scratch_dir
 from datapipelines_python_spark.registry import query
@@ -72,16 +73,13 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
     property, not an extra sort — the one-time staging sort here stands
     in for it at fixture scale.
     """
-    from datapipelines_python_spark.catalog import normalize_events_ts
-
     n_files = stream_split_files()
     key = (sf.rstrip("/"), n_files)
     staged = _STAGED_EVENTS.get(key)
     if staged is None or not os.path.isdir(staged):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        batch = normalize_events_ts(
-            spark.read.parquet(f"{key[0]}/events.parquet")
-        ).select("event_id", "ts", "user_id", "event_type", "value", "props")
+        batch = load_table(spark, key[0], "events").select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        )
         # pid-scoped staging dir: two concurrent processes sharing one
         # .scratch must never rmtree a staged copy the other is streaming
         # from (scratch_dir wipes its target; observed as a FileIndex
@@ -119,7 +117,7 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
         for i, f in enumerate(parts):
             os.utime(os.path.join(staged, f), (base + i, base + i))
         _STAGED_EVENTS[key] = staged
-    schema = spark.read.parquet(staged).schema
+    schema = read_parquet(spark, staged).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -215,6 +213,11 @@ class _state_sized:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
+# Name prefix of the thread that runs one streaming query (Spark 4.1
+# StreamExecution.queryExecutionThread), alive from start() to termination.
+_STREAM_THREAD = "stream execution thread for "
+
+
 def unload_state_stores(spark: SparkSession) -> None:
     """Drop every finished query's lingering state-store providers.
 
@@ -240,9 +243,18 @@ def unload_state_stores(spark: SparkSession) -> None:
     drain; the one caller is the threaded stream digest, which drains 19
     queries concurrently and sweeps the accumulated providers ONCE at
     its end — never mid-flight, because yanking providers from a
-    mid-batch sibling query forces checkpoint reloads."""
+    mid-batch sibling query forces checkpoint reloads.
+
+    ``StateStore.stop()`` is JVM-global, so it is skipped while any
+    streaming query of any session is running: ``spark.streams.active``
+    sees only the calling session's queries, but every running query
+    owns a live execution thread in the JVM."""
+    jvm = spark._jvm
+    threads = jvm.java.lang.Thread.getAllStackTraces().keySet().toString()
+    if _STREAM_THREAD in threads:
+        return
     try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception:  # pragma: no cover - never fail on cleanup
         pass
 
@@ -589,8 +601,6 @@ def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     against the batch customer table (re-read per micro-batch, so slowly
     changing dimensions pick up updates), then aggregated per segment.
     At scale the static side is broadcast into every micro-batch."""
-    from datapipelines_python_spark.catalog import load_table
-
     s = events_stream(spark, sf)
     c = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     joined = s.join(c, s.user_id == c.c_custkey)

@@ -34,20 +34,31 @@ def test_scan_meta_reads_rows_and_groups():
     assert rows == 6000
 
 
+def _expected_fanout(spark, target: int) -> int | None:
+    """What spread() must produce for a ``target`` it computed: the
+    target capped at the session's cores, or no repartition at all when
+    that cap does not beat the one-row-group scan."""
+    n = min(target, spark.sparkContext.defaultParallelism)
+    return n if n > 1 else None
+
+
 def test_target_is_rows_over_rows_per_task(spark):
     df = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
     out = spread(df, "l_orderkey", sf=SF_SMOKE, table="lineitem",
                  rows_per_task=1000)
-    # 6000 rows / 1000 per task = 6 < the 8 test cores -> 6 partitions,
-    # NOT defaultParallelism
-    assert _fanout(out) == 6
+    # 6000 rows / 1000 per task = 6 partitions when the session has at
+    # least 6 cores, NOT defaultParallelism
+    assert _fanout(out) == _expected_fanout(spark, 6)
 
 
 def test_target_capped_at_cores(spark):
+    cores = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    # two tasks' worth of rows per core: the rows-derived target is twice
+    # the core count, whatever that count is
     out = spread(df, "l_orderkey", sf=SF_SMOKE, table="lineitem",
-                 rows_per_task=100)
-    assert _fanout(out) == spark.sparkContext.defaultParallelism
+                 rows_per_task=max(1, 6000 // (2 * cores)))
+    assert _fanout(out) == _expected_fanout(spark, 2 * cores)
 
 
 def test_noop_when_not_worth_an_exchange(spark):

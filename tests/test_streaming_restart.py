@@ -10,9 +10,11 @@ pass.
 from __future__ import annotations
 
 import os
+import time
 
 import pyspark.sql.functions as F
 
+from datapipelines_python_spark.streaming.ops import unload_state_stores
 from tests.conftest import SF_SMOKE
 
 
@@ -67,3 +69,30 @@ def test_restart_with_no_new_data_is_noop(spark, scratch):
     n1 = spark.read.parquet(out_dir).count()
     _run_once(spark, in_dir, out_dir, ckpt, src.schema)
     assert spark.read.parquet(out_dir).count() == n1
+
+
+def test_unload_state_stores_spares_running_query(spark, scratch):
+    """StateStore.stop() is JVM-global: a cleanup call from one session
+    must leave a stateful query running in another session alone."""
+    store = spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    other = spark.newSession()
+    q = (
+        other.readStream.format("rate").option("rowsPerSecond", 10).load()
+        .groupBy((F.col("value") % 3).alias("k")).count()
+        .writeStream.format("memory").queryName("unload_guard_counts")
+        .outputMode("complete")
+        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 60
+        while not store.isMaintenanceRunning():  # first batch loaded state
+            assert time.monotonic() < deadline and q.isActive
+            time.sleep(0.2)
+        unload_state_stores(spark)
+        assert store.isMaintenanceRunning()
+        assert q.isActive and q.exception() is None
+    finally:
+        q.stop()
+    unload_state_stores(spark)  # nothing runs now: the stores are unloaded
+    assert not store.isMaintenanceRunning()
