@@ -45,9 +45,9 @@ from pyspark.sql import types as T
 DECIMAL = "decimal"
 
 # The single source of truth for "driver-unsafe" output types, imported by
-# scripts/audit_schemas.py and tests/test_schema_safety.py: auto-fixable
-# kinds (cast centrally here) vs nested kinds (must be flattened by hand
-# in the operator's own final select).
+# tests/test_schema_safety.py: auto-fixable kinds (cast centrally here) vs
+# nested kinds (must be flattened by hand in the operator's own final
+# select).
 AUTO_FIX_TYPES = (T.DecimalType,)
 NESTED_TYPES = (T.ArrayType, T.MapType, T.StructType)
 FORBIDDEN_TYPES = AUTO_FIX_TYPES + NESTED_TYPES

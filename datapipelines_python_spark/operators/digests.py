@@ -13,11 +13,19 @@ Membership and per-op render columns are pinned in the committed
 ``digest_snapshot`` (generated by ``scripts/gen_digest_snapshot.py``);
 this module must stay LAST in ``registry._OPERATOR_MODULES`` so every
 member is registered before the digests compose them.
+
+A digest runs down one path: every member builds and collects its 1-row
+fingerprint in its own ``spark.newSession()`` (same SparkContext, cached
+data and staged fixtures; its own SQL conf and temp views, so members
+that set session conf cannot race each other or the caller), from one
+``ThreadPoolExecutor``. ``threads=1`` is the sequential mode. The rows
+are assembled on the calling session, value-identical to a union of the
+member fingerprints (same plans, same rendering). A stream family passes
+its micro-batch split to each clone as a session conf.
 """
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +34,7 @@ from pyspark.sql import types as T
 from datapipelines_python_spark.digest import oracle_member_sql, spark_fingerprint
 from datapipelines_python_spark.digest_snapshot import DIGEST_COLS, DIGEST_FAMILIES
 from datapipelines_python_spark.registry import _REGISTRY, query
-
+from datapipelines_python_spark.session import tune_session
 
 # Micro-batch count for digest_stream member execution (VERDICT r7 #4:
 # the digest was 130 s of every sf0.1 profile, most of it per-micro-batch
@@ -39,34 +47,15 @@ from datapipelines_python_spark.registry import _REGISTRY, query
 # any N is precisely the property the invariance suite proves.
 STREAM_DIGEST_SPLIT = 2
 
-# Driver-side threads for BATCH digest evaluation (VERDICT r8 #4: the
-# digest lane was 572 s of the 1831 s full-registry sf1 profile — pure
-# evidence machinery). A batch digest builds AND collects each member's
-# 1-row fingerprint concurrently and returns the assembled rows as a
-# local DataFrame: per-member values are bit-identical (same
-# spark_fingerprint plan per member, just collected per-member instead of
-# through one 70-way union), but the ~0.4 s/member driver-side plan
-# analysis and the member jobs overlap instead of serializing. Measured
-# at sf0.1: digest_fx 44 s → ~13 s in-process. The stream digest threads
-# too since round 11, via per-member ``newSession()`` isolation (its
-# member fns mutate SESSION state — shuffle-partition context manager,
-# providerClass — which clones contain; see the stream branch below).
-# SPARK_GRAFT_DIGEST_THREADS=1 forces the original lazy-union path
-# (value-identical; the plan then shows the real 70-way union instead of
-# a collected LocalRelation — plan-inspection callers like
-# scripts/audit_plans.py set it). Read per digest CALL, not at import
-# (ADVICE r9): the toggle is runtime-effective and a malformed value
-# degrades to the default instead of crashing module import.
-_DIGEST_THREADS_DEFAULT = 12
-
-
-def _digest_threads() -> int:
-    try:
-        return int(
-            os.environ.get("SPARK_GRAFT_DIGEST_THREADS", _DIGEST_THREADS_DEFAULT)
-        )
-    except ValueError:
-        return _DIGEST_THREADS_DEFAULT
+# Pool widths (VERDICT r8 #4: the digest lane was 572 s of the 1831 s
+# full-registry sf1 profile — pure evidence machinery). Overlapping the
+# ~0.4 s/member driver-side plan analysis with the member jobs took
+# digest_fx from 44 s to ~13 s at sf0.1. Stream members each drain a
+# multi-batch streaming query with its own state-store tasks, so 6 in
+# flight keep the cores fed without stacking dozens of concurrent
+# micro-batch stages.
+BATCH_THREADS = 12
+STREAM_THREADS = 6
 
 _DIGEST_SCHEMA = T.StructType(
     [
@@ -77,7 +66,9 @@ _DIGEST_SCHEMA = T.StructType(
 )
 
 
-def _make_digest(members: tuple[str, ...], stream_split: int | None = None):
+def _make_digest(
+    members: tuple[str, ...], split: int | None = None, threads: int = BATCH_THREADS
+):
     specs = []
     for m in members:
         spec = _REGISTRY.get(m)
@@ -89,88 +80,34 @@ def _make_digest(members: tuple[str, ...], stream_split: int | None = None):
         specs.append(spec)
 
     def digest_fn(spark: SparkSession, sf: str) -> DataFrame:
-        threads = _digest_threads()
-        if stream_split is None and threads > 1:
-            # batch families: evaluate each member's fingerprint as its
-            # own small job, concurrently. Member fns here only perform
-            # idempotent session tuning (UTC/AQE/nanosAsLong) — enforced
-            # by tests/test_digests.py::test_batch_members_conf_safe —
-            # so concurrent plan-building is safe; distinct ops stage
-            # into distinct scratch paths.
-            def one(spec):
-                fp = spark_fingerprint(
-                    spec.fn(spark, sf), spec.name, DIGEST_COLS[spec.name]
-                )
-                return fp.collect()[0]
+        from datapipelines_python_spark.streaming import ops as _sops
 
+        def clone() -> SparkSession:
+            # runtime confs do not cross newSession(): re-tune each clone
+            sess = tune_session(spark.newSession())
+            if split is not None:
+                sess.conf.set(_sops.STREAM_FILES_CONF, str(split))
+            return sess
+
+        def one(spec):
+            fp = spark_fingerprint(
+                spec.fn(clone(), sf), spec.name, DIGEST_COLS[spec.name]
+            )
+            return fp.collect()[0]
+
+        try:
+            if split is not None:
+                # stage the shared ts-ordered events copy once, before
+                # threads could race its write
+                _sops.events_stream(clone(), sf)
             with ThreadPoolExecutor(max_workers=threads) as ex:
                 rows = list(ex.map(one, specs))
-            return spark.createDataFrame(rows, _DIGEST_SCHEMA)
-
-        if stream_split is not None and threads > 1:
-            # stream family, round 11 (VERDICT r10 #4): the documented
-            # reason this lane stayed sequential was session-state
-            # mutation (the shuffle-partition context manager, the
-            # providerClass get/set) — so give every member its OWN
-            # ``spark.newSession()``: same SparkContext and staged
-            # fixtures, isolated SQL conf and temp-view catalog, and
-            # per-member memory sinks/checkpoints are already uniquely
-            # named. The staged ts-ordered events copy is written ONCE
-            # up front on the calling session so threads never race the
-            # staging write. Runtime confs do not cross newSession(), so
-            # each clone is re-tuned (UTC timezone, AQE). Provider
-            # cleanup (unload_state_stores) runs ONCE at the end — never
-            # mid-flight, where StateStore.stop() (JVM-global) would
-            # yank providers from a mid-batch sibling. Fingerprint rows
-            # are collected per member and re-assembled on the calling
-            # session, value-identical to the sequential union (same
-            # plans, same rendering).
-            from datapipelines_python_spark.session import tune_session
-            from datapipelines_python_spark.streaming import ops as _sops
-
-            prev = os.environ.get("SPARK_GRAFT_STREAM_FILES")
-            if prev is None:
-                os.environ["SPARK_GRAFT_STREAM_FILES"] = str(stream_split)
-            try:
-                _sops.events_stream(spark, sf)  # pre-stage shared copy
-                def one_stream(spec):
-                    sess = tune_session(spark.newSession())
-                    fp = spark_fingerprint(
-                        spec.fn(sess, sf), spec.name, DIGEST_COLS[spec.name]
-                    )
-                    return fp.collect()[0]
-
-                # narrower pool than the batch lane: every member drains
-                # a multi-batch streaming query with its own state-store
-                # tasks; 6 in flight keeps the cores fed without
-                # stacking dozens of concurrent micro-batch stages
-                with ThreadPoolExecutor(max_workers=min(threads, 6)) as ex:
-                    rows = list(ex.map(one_stream, specs))
-            finally:
-                _sops.unload_state_stores(spark)
-                if prev is None:
-                    os.environ.pop("SPARK_GRAFT_STREAM_FILES", None)
-            return spark.createDataFrame(rows, _DIGEST_SCHEMA)
-
-        prev = os.environ.get("SPARK_GRAFT_STREAM_FILES")
-        if stream_split is not None and prev is None:
-            # honor an explicit env override (the invariance tests sweep
-            # it); otherwise run members at the digest's cheaper split
-            os.environ["SPARK_GRAFT_STREAM_FILES"] = str(stream_split)
-        try:
-            parts = [
-                spark_fingerprint(
-                    spec.fn(spark, sf), spec.name, DIGEST_COLS[spec.name]
-                )
-                for spec in specs
-            ]
         finally:
-            if stream_split is not None and prev is None:
-                os.environ.pop("SPARK_GRAFT_STREAM_FILES", None)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            if split is not None:
+                # StateStore.stop() is JVM-global: sweep the drained
+                # members' providers once at the end, never mid-flight
+                _sops.unload_state_stores(spark)
+        return spark.createDataFrame(rows, _DIGEST_SCHEMA)
 
     oracle = "\nUNION ALL\n".join(
         oracle_member_sql(spec.name, spec.oracle, DIGEST_COLS[spec.name])
@@ -180,9 +117,10 @@ def _make_digest(members: tuple[str, ...], stream_split: int | None = None):
 
 
 for _fam, _members in DIGEST_FAMILIES.items():
-    _fn, _oracle = _make_digest(
-        _members, stream_split=STREAM_DIGEST_SPLIT if _fam == "stream" else None
-    )
+    if _fam == "stream":
+        _fn, _oracle = _make_digest(_members, STREAM_DIGEST_SPLIT, STREAM_THREADS)
+    else:
+        _fn, _oracle = _make_digest(_members)
     _fn.__name__ = f"digest_{_fam}"
     _fn.__doc__ = (
         f"Family digest over {len(_members)} operators: "

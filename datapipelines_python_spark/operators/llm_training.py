@@ -511,7 +511,7 @@ _SQL_PROBE_BUCKETS = (
 # r9 #4): one table = one chance, and the measured sf1 pair-recall sat
 # at 0.114 vs the 0.143 fixture pin even with the E one-bit probes.
 # Numpy simulation over the verdict's candidate strategies
-# (scripts/sim_dedup_second_table.py, exact float64 truth, n = 20 000):
+# (SCALE.md §23, exact float64 truth, n = 20 000):
 #   home + E one-bit probes (current)          0.114  5.5M cand pairs
 #   2 independent tables, home only            0.042  1.6M
 #   2 independent tables, probes both          0.219 10.8M

@@ -899,7 +899,17 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     n_before = len(
         [f for f in os.listdir(frag) if f.endswith(".parquet")]
     )
-    spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(
+    # One scan split per fragment at any core count: Spark packs small
+    # files into about defaultParallelism splits and coalesce can only
+    # narrow, so at 2 cores the rewrite would write 2 files, not 4. An open
+    # cost of a whole split gives every fragment its own; the conf is set
+    # on a cloned session so the caller's session is untouched.
+    reader = spark.newSession()
+    reader.conf.set(
+        "spark.sql.files.openCostInBytes",
+        spark.conf.get("spark.sql.files.maxPartitionBytes"),
+    )
+    reader.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(
         compact
     )
     n_after = len(

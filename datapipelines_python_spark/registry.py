@@ -128,7 +128,6 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
     raw_fn: QueryFn | None = None  # pre-canonicalization plan (for snapshot gen)
-    canonicalized: bool = True  # False only for diag_probe_* canonicalizer probes
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -140,7 +139,6 @@ def query(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    canonicalize: bool = True,
 ):
     """Register an operator. ``oracle`` is DuckDB SQL over the fixture views.
 
@@ -158,27 +156,20 @@ def query(
         if name in _REGISTRY:
             raise ValueError(f"duplicate operator name {name!r}")
 
-        if canonicalize:
+        def canon_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return canonicalize_df(fn(spark, sf_dir))
 
-            def canon_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-                return canonicalize_df(fn(spark, sf_dir))
-
-            canon_fn.__name__ = fn.__name__
-            canon_fn.__doc__ = fn.__doc__
-            reg_fn = canon_fn
-            reg_oracle = (
-                wrap_oracle(oracle, CANON_COLS.get(name, {})) if oracle is not None else None
-            )
-        else:  # diag_probe_*: deliberately raw, to measure the driver's hasher
-            reg_fn, reg_oracle = fn, oracle
+        canon_fn.__name__ = fn.__name__
+        canon_fn.__doc__ = fn.__doc__
         _REGISTRY[name] = QuerySpec(
             name=name,
-            fn=reg_fn,
-            oracle=reg_oracle,
+            fn=canon_fn,
+            oracle=(
+                wrap_oracle(oracle, CANON_COLS.get(name, {})) if oracle is not None else None
+            ),
             tags=tags,
             bench=bench,
             raw_fn=fn,
-            canonicalized=canonicalize,
         )
         return fn
 

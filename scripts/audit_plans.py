@@ -1,9 +1,15 @@
-"""Registry-wide physical-plan audit.
+"""The registry walk, and the registry-wide physical-plan audit built on it.
 
-tests/test_plan_quality.py pins ~60 hand-picked plans; this walks ALL
-registered batch operators, builds each DataFrame at a small SF (plans
-only — nothing is executed), and tallies the physical operators that
-matter at 100 TB:
+:func:`walk` is the one registry walk: it builds each non-digest
+operator's raw plan once and records its raw schema, canonical schema and
+executed-plan counters (a build also runs the operator's eager work:
+connector writes, streaming drains). The plan audit below,
+``gen_canon.py``, ``gen_digest_snapshot.py`` and the Tier-1
+``registry_walk`` fixture all read it. Digests are skipped: their members
+are walked as the standalone operators they are.
+
+tests/test_plan_quality.py pins ~60 hand-picked plans; the audit tallies,
+for every walked operator, the physical operators that matter at 100 TB:
 
 - `Exchange` count (shuffle budget),
 - join strategy mix (BroadcastHash / SortMerge / ShuffledHash),
@@ -24,7 +30,7 @@ immediately (only the materialization job is deferred), so ops like
 ``graph_kcore`` are audited at their truncated post-checkpoint shape,
 matching what executes.
 
-Usage: python scripts/audit_plans.py [--sf /root/testdata/sf0.001]
+Usage: python scripts/audit_plans.py [--sf SF_DIR] [--only a,b]
 """
 
 from __future__ import annotations
@@ -38,6 +44,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datapipelines_python_spark import get_registry, get_spark
+from datapipelines_python_spark.canon import canonicalize_df
 
 # ops whose *point* is the flagged shape: physical cartesian, and the
 # row-at-a-time Python UDF surface (each has Arrow-batched siblings)
@@ -70,32 +77,30 @@ _COUNTERS = {
 }
 
 
-def audit(spark, sf: str, only=None) -> dict:
-    # Digest ops with the threaded executor eagerly run + collect all ~70
-    # member jobs inside spec.fn and return a LocalRelation — a plan-only
-    # audit would both pay full execution and record ~zero exchanges for
-    # them. Force the lazy-union path (value-identical; read per call by
-    # operators/digests._digest_threads) so digests are audited at their
-    # real 70-way union shape, for free (ADVICE r9).
-    os.environ["SPARK_GRAFT_DIGEST_THREADS"] = "1"
-    reg = get_registry()
+def walk(spark, sf: str, only=None) -> dict:
+    """Build each non-digest operator once; per operator record
+    ``{"raw_schema", "schema", "plan"}`` (the canonical schema and the
+    executed-plan counters). Build failures land in ``errors``."""
+    reg = {n: s for n, s in get_registry().items() if "digest" not in s.tags}
     if only:
         unknown = set(only) - set(reg)
-        if unknown:  # a typo'd --only must not exit 0 on zero ops audited
-            raise SystemExit(f"unknown operator name(s) in --only: {sorted(unknown)}")
+        if unknown:  # a typo'd --only must not exit 0 on zero ops walked
+            raise SystemExit(
+                f"unknown (or digest) operator name(s) in --only: {sorted(unknown)}")
     out, errors = {}, {}
     for name, spec in reg.items():
         if only and name not in only:
             continue
         try:
-            df = spec.fn(spark, sf)
+            raw = spec.raw_fn(spark, sf)
+            df = canonicalize_df(raw)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # streaming writers etc. surface here
             errors[name] = f"{type(e).__name__}: {e}"[:200]
             continue
         counts = {k: len(rx.findall(plan)) for k, rx in _COUNTERS.items()}
         counts["codegen"] = len(set(_COUNTERS["codegen"].findall(plan)))
-        out[name] = counts
+        out[name] = {"raw_schema": raw.schema, "schema": df.schema, "plan": counts}
     return {"sf": sf, "n_ops": len(out), "ops": out, "errors": errors}
 
 
@@ -134,9 +139,8 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark(app_name="plan-audit")
-    res = audit(spark, args.sf, set(args.only.split(",")) if args.only else None)
-
-    ops = res["ops"]
+    res = walk(spark, args.sf, set(args.only.split(",")) if args.only else None)
+    ops = res["ops"] = {n: r["plan"] for n, r in res["ops"].items()}
     bad_cart = [n for n, c in ops.items() if c["cartesian"] and n not in CARTESIAN_OK]
     bad_py = [
         n for n, c in ops.items()

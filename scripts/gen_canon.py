@@ -1,10 +1,11 @@
 """Regenerate datapipelines_python_spark/canon_snapshot.py.
 
-Builds every registered operator's RAW (pre-canonicalization) plan at
-sf0.001, collects top-level DATE/DECIMAL output columns, and rewrites the
-snapshot module. Run after adding/changing any operator that emits those
-types; tests/test_schema_safety.py fails if the committed snapshot drifts
-from live schemas.
+Reads every operator's RAW (pre-canonicalization) schema from the
+registry walk (scripts/audit_plans.walk) at sf0.001, collects top-level
+DECIMAL output columns, and rewrites the snapshot module. Run after
+adding/changing any operator that emits those types;
+tests/test_schema_safety.py fails if the committed snapshot drifts from
+live schemas.
 """
 
 from __future__ import annotations
@@ -15,8 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datapipelines_python_spark import get_registry, get_spark
+from datapipelines_python_spark import get_spark
 from datapipelines_python_spark.canon import risky_cols
+from scripts.audit_plans import walk
 
 HEADER = '''"""GENERATED by scripts/gen_canon.py — do not edit by hand.
 
@@ -29,15 +31,14 @@ CANON_COLS: dict[str, dict[str, str]] = '''
 
 
 def compute(sf: str = "/root/testdata/sf0.001") -> dict[str, dict[str, str]]:
-    spark = get_spark()
-    snap: dict[str, dict[str, str]] = {}
-    for name, spec in sorted(get_registry().items()):
-        if not spec.canonicalized:
-            continue  # diag_probe_* are deliberately raw
-        cols = risky_cols(spec.raw_fn(spark, sf).schema)
-        if cols:
-            snap[name] = cols
-    return snap
+    res = walk(get_spark(), sf)
+    if res["errors"]:
+        raise SystemExit(f"operators failed to build: {res['errors']}")
+    return {
+        name: cols
+        for name, rec in sorted(res["ops"].items())
+        if (cols := risky_cols(rec["raw_schema"]))
+    }
 
 
 def main() -> None:

@@ -6,7 +6,6 @@ so each family digest is one driver row that hash-checks ~40 previously
 unverified operators end to end. Excluded by design:
 
 - rows-only ops (no oracle: nothing to compose),
-- non-canonicalized diag probes,
 - ops whose canonical output schema contains a kind the fingerprint
   cannot render portably (none today; the generator hard-fails so a new
   one can't slip in silently).
@@ -45,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datapipelines_python_spark import get_registry, get_spark
 from datapipelines_python_spark.digest import kind_of
+from scripts.audit_plans import walk
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(REPO, "datapipelines_python_spark", "digest_snapshot.py")
@@ -101,8 +101,7 @@ def main() -> int:
         n
         for n, s in reg.items()
         if s.oracle is not None
-        and s.canonicalized
-        and not n.startswith(("digest_", "diag_probe_", "stream_"))
+        and not n.startswith(("digest_", "stream_"))
         and n not in green
     ]
     # stream family: ALL streaming ops, green or not (emission is
@@ -116,25 +115,24 @@ def main() -> int:
         for n, s in reg.items()
         if n.startswith("stream_")
         and s.oracle is not None
-        and s.canonicalized
         and n != "stream_transform_with_state"
     ]
     members.sort()
     print(f"{len(members)} exact-oracle ops to digest")
 
-    spark = get_spark("digest-snapshot")
+    res = walk(get_spark("digest-snapshot"), args.sf, set(members))
+    if res["errors"]:
+        raise SystemExit(f"members failed to build: {res['errors']}")
     cols: dict[str, tuple] = {}
     unsupported: dict[str, str] = {}
-    for i, name in enumerate(members):
+    for name in members:
         try:
-            df = reg[name].fn(spark, args.sf)
-            cols[name] = tuple(
-                sorted((f.name, kind_of(f.dataType)) for f in df.schema.fields)
-            )
+            cols[name] = tuple(sorted(
+                (f.name, kind_of(f.dataType))
+                for f in res["ops"][name]["schema"].fields
+            ))
         except TypeError as e:
             unsupported[name] = str(e)
-        if (i + 1) % 50 == 0:
-            print(f"... {i + 1}/{len(members)} schemas derived", file=sys.stderr)
     if unsupported:
         for n, msg in unsupported.items():
             print(f"UNSUPPORTED {n}: {msg}", file=sys.stderr)

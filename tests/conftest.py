@@ -20,6 +20,16 @@ def spark():
     return get_spark(app_name="tests", shuffle_partitions=8)
 
 
+@pytest.fixture(scope="session")
+def registry_walk(spark):
+    """The one registry walk (scripts/audit_plans.walk) per run: every
+    non-digest operator built once, read by the plan, schema and
+    digest-snapshot checks."""
+    from scripts.audit_plans import walk
+
+    return walk(spark, SF_SMOKE)
+
+
 @pytest.fixture()
 def scratch(tmp_path):
     return str(tmp_path)

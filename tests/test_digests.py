@@ -7,6 +7,8 @@ sibling operators, but only if the committed snapshot stays honest:
 - the snapshot's (col, kind) render list must match the member's LIVE
   canonical output schema (a silently-drifted schema would make the digest
   fingerprint a check of the wrong columns),
+- the digest path itself must reproduce the composed oracle at any pool
+  width without leaking conf or environment changes,
 - every never-driver-green exact-oracle batch op must be covered by
   exactly one digest (no silent coverage holes, no double counting),
 - the per-kind rendering must agree bit-for-bit across engines on the
@@ -51,7 +53,6 @@ def test_members_exist_with_oracles():
             spec = reg.get(m)
             assert spec is not None, f"{fam}: member {m} gone from registry"
             assert spec.oracle is not None, f"{fam}: member {m} lost its oracle"
-            assert spec.canonicalized, f"{fam}: member {m} is a raw diag probe"
 
 
 def test_digest_ops_registered_with_composed_oracles():
@@ -67,16 +68,44 @@ def test_digest_ops_registered_with_composed_oracles():
 
 
 @pytest.mark.parametrize("fam", sorted(DIGEST_FAMILIES))
-def test_snapshot_matches_live_schema(spark, fam):
-    """For every member: live canonical output schema == snapshot cols.
-
-    Plan-build only (nothing executes); catches renamed/retyped columns
+def test_snapshot_matches_live_schema(registry_walk, fam):
+    """For every member: live canonical output schema (from the shared
+    registry walk) == snapshot cols; catches renamed/retyped columns
     that would silently fingerprint the wrong thing."""
-    reg = get_registry()
+    ops = registry_walk["ops"]
     for m in DIGEST_FAMILIES[fam]:
-        df = reg[m].fn(spark, SF)
-        live = tuple(sorted((f.name, kind_of(f.dataType)) for f in df.schema.fields))
+        assert m in ops, f"{m}: failed to build — {registry_walk['errors'].get(m)}"
+        live = tuple(
+            sorted((f.name, kind_of(f.dataType)) for f in ops[m]["schema"].fields)
+        )
         assert live == DIGEST_COLS[m], f"{m}: schema drifted — regenerate snapshot"
+
+
+def test_digest_path_matches_oracle_at_any_width(spark):
+    """The one digest path (operators/digests._make_digest): every member
+    in its own cloned session, from one pool. A small digest over 2 batch
+    and 2 stream members at split 2 must equal its composed DuckDB oracle,
+    give identical rows sequentially (threads=1) and threaded (threads=4),
+    and leave the environment and the calling session's conf untouched."""
+    import os
+
+    from datapipelines_python_spark.catalog import TABLES
+    from datapipelines_python_spark.operators.digests import _make_digest
+
+    members = ("fn_bitwise", "fn_mask", "stream_dedup", "stream_tumbling_agg")
+    env, conf = dict(os.environ), spark.conf.getAll
+    got = {}
+    for threads in (1, 4):
+        fn, oracle = _make_digest(members, split=2, threads=threads)
+        got[threads] = sorted(tuple(r) for r in fn(spark, SF).collect())
+    assert got[1] == got[4]
+    assert [r[0] for r in got[1]] == sorted(members)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    assert got[1] == sorted(con.execute(oracle).fetchall())
+    assert dict(os.environ) == env
+    assert spark.conf.getAll == conf
 
 
 def test_never_green_batch_ops_all_covered():
@@ -104,51 +133,12 @@ def test_never_green_batch_ops_all_covered():
         n
         for n, s in reg.items()
         if s.oracle is not None
-        and s.canonicalized
-        and not n.startswith(("digest_", "diag_probe_", "stream_"))
+        and not n.startswith(("digest_", "stream_"))
         and n not in green
     }
     covered = set(DIGEST_COLS)
     missing = want - covered
     assert not missing, f"never-green ops not in any digest: {sorted(missing)}"
-
-
-def test_batch_members_conf_safe():
-    """The threaded batch-digest executor (operators/digests.py) runs up
-    to 12 member fns concurrently on ONE SparkSession. That is safe only
-    while members never *temporarily* mutate session conf — a
-    save/mutate/restore window races under concurrency, whereas one-way
-    idempotent sets (nanosAsLong / UTC / AQE, always to the same value)
-    commute. Enforce the invariant at the source level (ADVICE r9): a
-    batch member whose fn source shows a conf context manager, a
-    get-then-restore pattern, conf.unset, the stream-split env knob, or a
-    non-allowlisted conf.set key must either drop the pattern or move to
-    the sequential stream digest."""
-    import inspect
-    import re
-
-    idempotent = {
-        "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.session.timeZone",
-        "spark.sql.adaptive.enabled",
-    }
-    banned = ("_state_sized", "SPARK_GRAFT_STREAM_FILES", "conf.unset", "conf.get(")
-    reg = get_registry()
-    offenders: dict[str, list[str]] = {}
-    for fam, members in DIGEST_FAMILIES.items():
-        if fam == "stream":
-            continue
-        for m in members:
-            src = inspect.getsource(reg[m].fn)
-            hits = [b for b in banned if b in src]
-            hits += [
-                f"conf.set({key})"
-                for key in re.findall(r"conf\.set\(\s*['\"]([^'\"]+)", src)
-                if key not in idempotent
-            ]
-            if hits:
-                offenders[m] = hits
-    assert not offenders, f"conf-unsafe batch digest members: {offenders}"
 
 
 def test_rendering_hazards_cross_engine(spark):

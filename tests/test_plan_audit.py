@@ -1,7 +1,8 @@
 """Registry-WIDE physical-plan invariants (scripts/audit_plans.py).
 
 test_plan_quality.py pins ~60 hand-picked plans in detail; this sweeps
-every registered batch operator's executed plan and enforces the three
+every walked operator's executed plan (digests are walked as their
+members) and enforces the three
 blanket rules that keep the whole surface 100 TB-legal:
 
 1. No physical CartesianProduct anywhere except ``join_cross`` (the
@@ -25,8 +26,8 @@ from __future__ import annotations
 
 import pytest
 
-from scripts.audit_plans import CARTESIAN_OK, ROW_PYTHON_OK, audit, build_summary
-from tests.conftest import SF_SMOKE
+from datapipelines_python_spark import get_registry
+from scripts.audit_plans import CARTESIAN_OK, ROW_PYTHON_OK, build_summary
 
 # Reviewed theta-BNLJ allowlist (bounded broadcast side for each):
 THETA_BNLJ_OK = {
@@ -53,38 +54,24 @@ THETA_BNLJ_OK = {
 
 
 @pytest.fixture(scope="module")
-def plan_audit(spark):
-    return audit(spark, SF_SMOKE)
+def plan_ops(registry_walk):
+    return {n: r["plan"] for n, r in registry_walk["ops"].items()}
 
 
-def _batch_ops(plan_audit):
-    """Digest ops are compositions: each digest plan is literally the
-    union of its members' plans, so every flagged shape inside one is
-    already pinned (or caught) on the member itself. Auditing them again
-    at the digest level would double-report the sanctioned members."""
-    return {
-        n: c for n, c in plan_audit["ops"].items() if not n.startswith("digest_")
-    }
-
-
-def test_no_unreviewed_cartesian(plan_audit):
-    bad = [
-        n for n, c in _batch_ops(plan_audit).items()
-        if c["cartesian"] and n not in CARTESIAN_OK
-    ]
+def test_no_unreviewed_cartesian(plan_ops):
+    bad = [n for n, c in plan_ops.items() if c["cartesian"] and n not in CARTESIAN_OK]
     assert bad == [], f"physical CartesianProduct outside whitelist: {bad}"
 
 
-def test_no_unreviewed_row_python(plan_audit):
+def test_no_unreviewed_row_python(plan_ops):
     bad = [
-        n for n, c in _batch_ops(plan_audit).items()
-        if c["batch_eval_python"] and n not in ROW_PYTHON_OK
+        n for n, c in plan_ops.items() if c["batch_eval_python"] and n not in ROW_PYTHON_OK
     ]
     assert bad == [], f"row-at-a-time Python outside whitelist: {bad}"
 
 
-def test_theta_bnlj_set_is_pinned(plan_audit):
-    got = {n for n, c in _batch_ops(plan_audit).items() if c["bnlj_cond"]}
+def test_theta_bnlj_set_is_pinned(plan_ops):
+    got = {n for n, c in plan_ops.items() if c["bnlj_cond"]}
     new = got - THETA_BNLJ_OK
     gone = THETA_BNLJ_OK - got
     assert not new, (
@@ -96,27 +83,27 @@ def test_theta_bnlj_set_is_pinned(plan_audit):
     )
 
 
-def test_summary_name_lists_agree_with_counts(plan_audit):
+def test_summary_name_lists_agree_with_counts(plan_ops):
     """VERDICT r8 #5: the summary's row/arrow-Python counts must be
     derivable from — and name-listed alongside — the per-op records, so
     an auditor can jq straight to the offending op names."""
-    ops = plan_audit["ops"]
-    s = build_summary(ops)
+    s = build_summary(plan_ops)
     assert s["row_python_ops"] == len(s["row_python_op_names"])
     assert s["arrow_python_ops"] == len(s["arrow_python_op_names"])
     assert s["row_python_op_names"] == sorted(
-        n for n, c in ops.items() if c["batch_eval_python"]
+        n for n, c in plan_ops.items() if c["batch_eval_python"]
     )
     assert s["arrow_python_op_names"] == sorted(
-        n for n, c in ops.items() if c["arrow_eval_python"] or c["pandas_map"]
+        n for n, c in plan_ops.items()
+        if c["arrow_eval_python"] or c["pandas_map"]
     )
 
 
-def test_whole_registry_plans_buildable(plan_audit):
+def test_whole_registry_plans_buildable(registry_walk):
     # every registered op must at least PLAN at smoke scale
-    assert plan_audit["errors"] == {}, plan_audit["errors"]
+    assert registry_walk["errors"] == {}, registry_walk["errors"]
     # 617 frozen + 11 ANN twins + stream_tws_fallback (the protobuf-free
-    # applyInPandasWithState twin, round 7) + 8 family digests (round 8
-    # compressed the digest lane 17 → 8, VERDICT r7 #2 — same members,
-    # coarser pools, bigger chunks)
-    assert plan_audit["n_ops"] == 637
+    # applyInPandasWithState twin, round 7) are walked; the 8 family
+    # digests are registered on top but walked as their members
+    assert registry_walk["n_ops"] == 629
+    assert len(get_registry()) == 637

@@ -9,9 +9,10 @@ pin the invariant that no registered operator ever returns those types,
 and that the committed ``canon_snapshot`` used to wrap the DuckDB oracles
 agrees with the live pre-canonicalization Spark schemas.
 
-Building every plan is analysis-only, but a few connector ops execute
-writes; the whole sweep runs in a few minutes at sf0.001 and is the reason
-a new operator with a risky output type can never reach the driver.
+Both checks read the shared ``registry_walk`` (scripts/audit_plans.walk),
+so every plan is built once per run, and a new operator with a risky
+output type fails here first. Digests are walked as their members; their
+own schema is the fixed ``(op_name, n_rows, fp)``.
 """
 
 from __future__ import annotations
@@ -21,41 +22,17 @@ import datetime as dt
 import pytest
 from pyspark.sql import types as T
 
-from datapipelines_python_spark import get_registry
-from datapipelines_python_spark.canon import FORBIDDEN_TYPES, canonicalize_df, risky_cols
+from datapipelines_python_spark.canon import FORBIDDEN_TYPES, risky_cols
 from datapipelines_python_spark.canon_snapshot import CANON_COLS
 
-SF = "/root/testdata/sf0.001"
 
-FORBIDDEN = FORBIDDEN_TYPES  # single source of truth in canon.py
-
-
-def _registry_items():
-    return sorted(get_registry().items())
-
-
-@pytest.fixture(scope="module")
-def schemas(spark):
-    """Canonicalized + raw output schema per op. Each plan is built ONCE
-    (spec.fn would rebuild raw_fn internally — and re-run connector ops'
-    writes); the canonical schema is derived from the raw plan."""
-    out = {}
-    for name, spec in _registry_items():
-        raw = spec.raw_fn(spark, SF)
-        canon_schema = canonicalize_df(raw).schema if spec.canonicalized else raw.schema
-        out[name] = (canon_schema, raw.schema, spec)
-    return out
-
-
-def test_no_risky_output_types(schemas):
+def test_no_risky_output_types(registry_walk):
     offenders = {}
-    for name, (schema, _raw, spec) in schemas.items():
-        if not spec.canonicalized:
-            continue  # diag_probe_* exist to emit risky types on purpose
+    for name, rec in registry_walk["ops"].items():
         bad = [
             (f.name, type(f.dataType).__name__)
-            for f in schema.fields
-            if isinstance(f.dataType, FORBIDDEN)
+            for f in rec["schema"].fields
+            if isinstance(f.dataType, FORBIDDEN_TYPES)
         ]
         if bad:
             offenders[name] = bad
@@ -65,16 +42,14 @@ def test_no_risky_output_types(schemas):
     )
 
 
-def test_canon_snapshot_matches_live_schemas(schemas):
+def test_canon_snapshot_matches_live_schemas(registry_walk):
     """The oracle-side REPLACE wrapping is driven by canon_snapshot.py;
     regenerate with scripts/gen_canon.py when this fails."""
-    live = {}
-    for name, (_schema, raw_schema, spec) in schemas.items():
-        if not spec.canonicalized:
-            continue
-        cols = risky_cols(raw_schema)
-        if cols:
-            live[name] = cols
+    live = {
+        name: cols
+        for name, rec in registry_walk["ops"].items()
+        if (cols := risky_cols(rec["raw_schema"]))
+    }
     assert live == CANON_COLS, (
         "canon_snapshot.py is stale — run: python scripts/gen_canon.py"
     )

@@ -89,3 +89,18 @@ def test_env_override_wins(spark, monkeypatch):
     out = spread(df, "l_orderkey", sf=SF_SMOKE, table="lineitem",
                  rows_per_task=1000)
     assert _fanout(out) == 3
+
+
+def test_compaction_file_count_is_core_invariant(spark):
+    """sink_compact_small_files rewrites its 64 fragments as 4 files at
+    any core count. Spark packs small files into about
+    ``leafNodeDefaultParallelism`` scan splits and ``coalesce`` can only
+    narrow, so without one split per fragment a 2-core session writes 2
+    files against the oracle's 4. A session whose parallelism is 2
+    emulates that machine."""
+    from datapipelines_python_spark import get_registry
+
+    sess = spark.newSession()
+    sess.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+    row = get_registry()["sink_compact_small_files"].fn(sess, SF_SMOKE).collect()[0]
+    assert (row.n_files_before, row.n_files_after) == (64, 4)

@@ -2,7 +2,8 @@
 (VERDICT r5 #1/#2).
 
 ``events_stream`` stages the source as a ts-ORDERED copy split into
-``SPARK_GRAFT_STREAM_FILES`` parquet files read one-per-micro-batch, so
+``stream_split_files(spark)`` parquet files (the session conf
+``spark.datapipelines.stream.files``) read one-per-micro-batch, so
 ordered arrival makes watermark drops impossible at ANY split and every
 closure-replay oracle stays exact. This suite forces the splits the
 driver might produce (N ∈ {1, 2, 8}; the repo default is 4, exercised by
@@ -17,9 +18,9 @@ every other run) on the ops whose r5 reds were batch-split-sensitive:
 - ``stream_stream_left_outer`` — outer-join null-row emission horizons
   under a progressing (per-batch) watermark.
 
-Each op runs the REAL streaming engine at each split and is compared
-against its registered DuckDB oracle — the same differential the driver
-performs.
+Each op runs the REAL streaming engine at each split, set on a cloned
+session so no other test sees it, and is compared against its registered
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ import os
 import duckdb
 import pytest
 
+from datapipelines_python_spark.streaming.ops import STREAM_FILES_CONF
 from tests.conftest import SF_SMOKE, norm_rows
 
 OPS = (
@@ -57,20 +59,12 @@ def duck_all():
 @pytest.mark.parametrize("op", OPS)
 def test_split_invariant_vs_oracle(spark, duck_all, op, n_files):
     from datapipelines_python_spark import get_registry
-    from datapipelines_python_spark.streaming import ops as stream_ops
+    from datapipelines_python_spark.session import tune_session
 
     spec = get_registry()[op]
-    old = os.environ.get("SPARK_GRAFT_STREAM_FILES")
-    os.environ["SPARK_GRAFT_STREAM_FILES"] = str(n_files)
-    try:
-        got = norm_rows(
-            tuple(r) for r in spec.fn(spark, SF_SMOKE).collect()
-        )
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_STREAM_FILES", None)
-        else:
-            os.environ["SPARK_GRAFT_STREAM_FILES"] = old
+    sess = tune_session(spark.newSession())
+    sess.conf.set(STREAM_FILES_CONF, str(n_files))
+    got = norm_rows(tuple(r) for r in spec.fn(sess, SF_SMOKE).collect())
     want = norm_rows(duck_all.execute(spec.oracle).fetchall())
     assert got == want, (
         f"{op} diverged from oracle at {n_files}-file split: "
@@ -83,17 +77,12 @@ def test_staged_source_is_ts_ordered(spark):
     """The staged copy must replay oldest-first: read the staged files in
     mtime order and assert each file's max(ts) ≤ the next file's min(ts)
     (NULLs staged first)."""
-    os.environ["SPARK_GRAFT_STREAM_FILES"] = "4"
-    try:
-        from datapipelines_python_spark.streaming.ops import (
-            _STAGED_EVENTS,
-            events_stream,
-        )
+    from datapipelines_python_spark.streaming.ops import _STAGED_EVENTS, events_stream
 
-        events_stream(spark, SF_SMOKE)  # triggers staging
-        staged = _STAGED_EVENTS[(SF_SMOKE, 4)]
-    finally:
-        os.environ.pop("SPARK_GRAFT_STREAM_FILES", None)
+    sess = spark.newSession()
+    sess.conf.set(STREAM_FILES_CONF, "4")
+    events_stream(sess, SF_SMOKE)  # triggers staging
+    staged = _STAGED_EVENTS[(SF_SMOKE, 4)]
     parts = sorted(
         f
         for f in os.listdir(staged)
