@@ -41,6 +41,9 @@ family representatives) runs before any clock starts, so first-position
 cost lands on no measured run. BASELINE.md's lock is re-taken under this
 methodology in round 7.
 
+``cpus`` in the JSON line is the session's ``defaultParallelism``: a
+wall is only comparable with walls taken at the same core count.
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
 """
@@ -53,6 +56,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import functions as F
 
 from datapipelines_python_spark import get_registry
 from datapipelines_python_spark.session import get_spark
@@ -108,6 +113,24 @@ HEADLINE_ORDER: tuple[str, ...] = (
 )
 
 
+def consume(df) -> None:
+    """Hash every output column: nothing is prunable, rows never reach
+    the driver, and the aggregate is trivial next to the plan measured."""
+    df.select(F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
+
+
+def time_op(spark, fn, sf_dir: str, runs: int = 3) -> list[float]:
+    """One untimed warm run (codegen/JIT for this plan), then ``runs``
+    timed runs through :func:`consume`; returns their wall seconds."""
+    consume(fn(spark, sf_dir))
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        consume(fn(spark, sf_dir))
+        walls.append(time.perf_counter() - t0)
+    return walls
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
@@ -133,15 +156,6 @@ def main() -> None:
     headline_names += extra
     bench_ops = {n: registry[n] for n in headline_names}
 
-    from pyspark.sql import functions as F
-
-    def consume(df) -> None:
-        # hash every output column: nothing is prunable, rows never reach
-        # the driver, agg cost is trivial vs the plan being measured
-        df.select(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-        ).collect()
-
     # Untimed full-suite warm lap (VERDICT r6 #1): every measured plan —
     # headliners and family representatives — runs once before any clock
     # starts, so JVM JIT / executor spin-up / parquet footer cache cost
@@ -153,15 +167,10 @@ def main() -> None:
     for name in warm_names:
         consume(registry[name].fn(spark, sf_dir))
 
-    times: dict[str, float] = {}
-    for name, spec in bench_ops.items():
-        consume(spec.fn(spark, sf_dir))  # warm: codegen/JIT for THIS plan
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            consume(spec.fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
+    times = {
+        name: round(min(time_op(spark, spec.fn, sf_dir)), 3)
+        for name, spec in bench_ops.items()
+    }
 
     families: dict[str, float | None] = {}
     family_queries: dict[str, float] = {}
@@ -177,18 +186,9 @@ def main() -> None:
             )
             families[fam] = None
             continue
-        wall = 0.0
-        for name in members:
-            spec = registry[name]
-            consume(spec.fn(spark, sf_dir))  # warm: codegen/JIT
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                consume(spec.fn(spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-            family_queries[name] = round(best, 3)
-            wall += best
-        families[fam] = round(wall, 3)
+        walls = [min(time_op(spark, registry[n].fn, sf_dir)) for n in members]
+        family_queries.update(zip(members, (round(w, 3) for w in walls)))
+        families[fam] = round(sum(walls), 3)
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
@@ -205,6 +205,7 @@ def main() -> None:
                 "families": families,
                 "family_queries": family_queries,
                 "sf": sf_num,
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         )
     )

@@ -74,25 +74,38 @@ def _scan_meta(sf_dir: str, table: str) -> tuple[int, int | None]:
         return 1 << 30, None
 
 
-def scan_parallelism(sf_dir: str, table: str) -> int:
-    """Upper bound on a fixture table's parquet scan parallelism (see
-    :func:`_scan_meta`)."""
-    return _scan_meta(sf_dir, table)[0]
+# Work one task should carry, per cost class: rows (or, for the two
+# streaming-state classes, bytes of replayed input) that take a task
+# tens of milliseconds (guide §2.2 "fewer, larger partitions"). One table
+# for every sizing site; to A/B a width, override an entry in-process
+# (``PER_TASK["python"] = 1`` pins every Python stage at the core cap).
+PER_TASK: dict[str, int] = {
+    # dense JVM scan + multi-aggregate (decimal sums, percentiles)
+    "agg": 20_000,
+    # JVM join / exchange chains (tpch q3-q21, basket mining)
+    "join_chain": 75_000,
+    # rows through a Python worker: pandas UDFs, Python data sources
+    "python": 7_500,
+    # rows that each fan out into per-dimension or pairwise work
+    # (embedding folds, salted fuzzy blocks, geo and ROUGE pair loops)
+    "vector": 64,
+    # replayed stream input bytes per JVM state partition
+    "jvm_state": 8 << 20,
+    # replayed stream input bytes per Python (pandas) state partition
+    "python_state": 256 << 10,
+}
 
 
-def py_stage_partitions(spark) -> int:
-    """Partition count for a stage whose cost is per-row/per-group PYTHON
-    work (applyInPandas, pandas window frames): parallelism, not
-    partition byte-size, is what matters there, so AQE's byte-based
-    coalescing (which lands a skinny shuffle on 1-2 partitions) is the
-    wrong sizer. Use the session's core count, or the configured shuffle
-    width when a deployment sets it higher — i.e. exactly what the
-    ENSURE_REQUIREMENTS exchange would have used before coalescing."""
-    try:
-        conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        conf = 0
-    return max(spark.sparkContext.defaultParallelism, conf)
+def task_count(spark, work: int | None, cost: str) -> int:
+    """The one partition-count rule: ``ceil(work / PER_TASK[cost])``
+    tasks, at least 1 and at most the session's cores. Cores are only
+    ever the cap: a small input keeps few tasks on any machine, and a
+    large one never waits on fewer tasks than cores. Unknown work
+    (``None``: a layout whose footers were not read) takes the cap."""
+    cores = spark.sparkContext.defaultParallelism
+    if work is None:
+        return cores
+    return max(1, min(cores, -(-work // PER_TASK[cost])))
 
 
 def spread(
@@ -100,7 +113,8 @@ def spread(
     *keys: str | Column,
     sf: str,
     table: str,
-    rows_per_task: int = 20_000,
+    cost: str = "agg",
+    weight: float = 1.0,
 ) -> DataFrame:
     """Hash-redistribute a serial scan across idle cores.
 
@@ -112,27 +126,19 @@ def spread(
     aggregation — runs serially. One hash repartition on an existing
     high-cardinality key (never round-robin: keyless ``repartition(n)``
     pays the sort-before-repartition pass and re-draws under retry,
-    SPARK-38388) converts that stage to cores-wide.
+    SPARK-38388) converts that stage to several tasks.
 
-    Scale-adaptive, not a local[32] constant: the trigger is the
-    *measured* row-group count of the table's files, so on a production
-    many-row-group layout this is an exact no-op; and the TARGET (round
-    11, VERDICT r10 #1) is sized to the measured work — ``ceil(table
-    rows / rows_per_task)``, capped at the session's cores — instead of
-    a flat ``defaultParallelism``. Round 10 fanned every spread to the
-    core count, and the driver's 8-vs-32-core probe showed the
-    join-chain ops (tpch q9/q21, ml_kmeans_lloyd) ANTI-scaling: at
-    fixture volume, 32 near-empty shuffle partitions cost more exchange
-    and task-scheduling overhead than the serial stage they replace.
-    ``rows_per_task`` is per-call-site, calibrated by the measured
-    per-row downstream cost (a partition should carry tens of
-    milliseconds of work, guide §2.2 "fewer, larger partitions"): dense
-    multi-aggregate scans keep the 20k default; join-chain pipelines
-    ride 75k–150k; the tiny-but-compute-explosive embedding ops set
-    their own (see call sites). At the next decade (sf1, 6M rows) every
-    site reaches the core cap, so large-scale behavior is unchanged.
-    ``SPARK_GRAFT_SPREAD_PARTITIONS`` force-overrides the computed
-    target (deployment escape hatch / A-B harness).
+    The width is :func:`task_count` of the table's footer rows times
+    ``weight`` — the work one table row brings in cost class ``cost``'s
+    units: a filter that keeps a fifth of the rows weighs 0.2, a row with
+    an eighth of the class's per-row compute weighs 1/8. A flat core
+    count anti-scales: an 8-vs-32-core probe showed tpch q9/q21 and
+    ml_kmeans_lloyd slower at 32 cores, where near-empty shuffle
+    partitions cost more exchange and scheduling overhead than the
+    serial stage they replace. It is a no-op when that width does
+    not beat the layout's own scan parallelism (measured row groups), so
+    a production many-row-group layout that already feeds the cores is
+    passed through untouched.
 
     Apply only AFTER pushed filters/projections (shuffle fewer bytes,
     guide §2.3) and only in operators whose aggregates are
@@ -140,18 +146,10 @@ def spread(
     totally-ordered windows) so results stay bit-identical under any
     partitioning.
     """
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
     scan_par, rows = _scan_meta(sf, table)
-    if scan_par >= cores:
-        return df
-    v = os.environ.get("SPARK_GRAFT_SPREAD_PARTITIONS")
-    if v:
-        n = max(1, int(v))
-    elif rows is None:
-        n = cores
-    else:
-        n = min(cores, -(-rows // max(1, rows_per_task)))
+    n = task_count(
+        df.sparkSession, None if rows is None else int(rows * weight), cost
+    )
     if n <= max(1, scan_par):
         return df
     return df.repartition(n, *keys)

@@ -22,12 +22,14 @@ from pyspark.sql.window import Window as W
 
 from datapipelines_python_spark.catalog import load_table
 from datapipelines_python_spark.operators._helpers import (
+    _scan_meta,
     dsum,
     md5_coord,
     round4,
     sql_dsum,
     sql_md5_coord,
     sql_round4,
+    task_count,
 )
 from datapipelines_python_spark.registry import query
 
@@ -820,9 +822,9 @@ def join_fuzzy_blocked(spark: SparkSession, sf: str) -> DataFrame:
     # and the S-way replication on side `b`, multiplying the key count
     # ~S× at an S× b-row cost (skinny strings); each (a, b) pair still
     # meets exactly once, at a's salt.
-    # S tracks the session's parallelism so a larger cluster gets more
-    # spread, capped so build replication stays bounded.
-    n_salt = max(1, min(16, spark.sparkContext.defaultParallelism // 4))
+    # S is the part rows' task count in the pairwise (``vector``) class,
+    # capped at 16 so build replication stays bounded.
+    n_salt = min(16, task_count(spark, _scan_meta(sf, "part")[1], "vector"))
     a = p.filter(F.col("p_partkey") % 5 == 0).select(
         F.col("p_partkey").alias("ak"),
         F.col("p_name").alias("an"),
@@ -1225,9 +1227,11 @@ def join_geo_bucketed(spark: SparkSession, sf: str) -> DataFrame:
     # whose tiny byte size (150k skinny rows ≈ 5 MB) AQE coalesces
     # straight back to one partition — bytes are the wrong split driver
     # for a CPU-bound pair loop (measured at sf1: 377 s unpartitioned,
-    # 55 s AQE-coalesced, ~8 s at defaultParallelism).
+    # 55 s AQE-coalesced, ~8 s at the core count). The width is the
+    # customer rows' task count in the pairwise (``vector``) class.
     pts = pts.repartition(
-        spark.sparkContext.defaultParallelism, F.col("c_custkey")
+        task_count(spark, _scan_meta(sf, "customer")[1], "vector"),
+        F.col("c_custkey"),
     )
     stores = pts.filter(F.col("c_custkey") % 100 == 0)
 

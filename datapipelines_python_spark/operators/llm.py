@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from datapipelines_python_spark.catalog import load_table
 from datapipelines_python_spark.operators._helpers import (
     DEC,
+    _scan_meta,
     davg,
     dsum,
     round4,
@@ -30,6 +31,7 @@ from datapipelines_python_spark.operators._helpers import (
     sql_davg,
     sql_dsum,
     sql_round4,
+    task_count,
 )
 from datapipelines_python_spark.registry import query
 
@@ -982,9 +984,13 @@ def ml_kmeans_lloyd(spark: SparkSession, sf: str) -> DataFrame:
     crossJoin assign passes one core is ``spread`` cores-wide — the K
     broadcast-d² folds per row are order-independent."""
     emb = load_table(spark, sf, "embeddings")
+    # A vector-class row carries ~d² work (ml_pca_power's outer product);
+    # a row here folds K=8 centroids of d=64 dims, K·d = an eighth of
+    # that. At 32 cores a full-width spread of this many-stage plan read
+    # 1.57 s against 0.99 s at 4 tasks (sf0.1).
     v = spread(
         emb.select("vec_id", "embedding"), "vec_id", sf=sf, table="embeddings",
-        rows_per_task=500,
+        cost="vector", weight=8 / 64,
     )
 
     def d2(a, b):
@@ -3211,10 +3217,11 @@ def llm_rouge_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # a handful of tasks at ANY corpus size — and everything downstream
     # is the expensive part: O(u·len) clipped-intersection folds per
     # pair. One hash repartition on the pair key fans those folds across
-    # the cores (guide §2.6 idle capacity); each fold is row-local, so
-    # values are identical under any partitioning.
+    # the cores (guide §2.6 idle capacity), sized to the documents' rows
+    # in the ``vector`` class; each fold is row-local, so values are
+    # identical under any partitioning.
     paired = paired.repartition(
-        paired.sparkSession.sparkContext.defaultParallelism, "cand_id"
+        task_count(spark, _scan_meta(sf, "documents")[1], "vector"), "cand_id"
     )
     # zip_with over offset slices, not sequence(1, size-1): for a
     # single-token doc the sequence form yields a DESCENDING [1,0] and an

@@ -647,7 +647,7 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
         load_table(spark, sf, "orders").filter(
             F.col("o_orderstatus") == "F"
         ).select("o_orderkey", "o_custkey", "o_orderstatus"),
-        "o_orderkey", sf=sf, table="orders", rows_per_task=10_000,
+        "o_orderkey", sf=sf, table="orders", cost="python",
     )
     src.write.format("part_file_sink").option("path", out_dir).mode("append").save()
     return spark.read.schema(

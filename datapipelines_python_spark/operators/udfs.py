@@ -20,9 +20,10 @@ from pyspark.sql.functions import pandas_udf, udf
 
 from datapipelines_python_spark.catalog import load_table
 from datapipelines_python_spark.operators._helpers import (
-    py_stage_partitions,
+    _scan_meta,
     round4,
     sql_round4,
+    task_count,
 )
 from datapipelines_python_spark.registry import query
 
@@ -126,15 +127,17 @@ def udf_grouped_map(spark: SparkSession, sf: str) -> DataFrame:
     # - applyInPandas is opaque to column pruning: without the explicit
     #   select the WHOLE row (fat `props` JSON included) is shuffled and
     #   Arrow-shipped per group; the function reads exactly three columns.
-    # - the group exchange is provided EXPLICITLY at the core count
-    #   instead of letting ENSURE_REQUIREMENTS + AQE size it: AQE
-    #   coalesces by BYTES (the skinny shuffle lands at ~2 partitions),
-    #   but the stage cost is per-row Python, so parallelism — not
-    #   partition size — is what matters. groupBy reuses this exchange
-    #   (same key), so no extra shuffle; measured 4.5 → 0.7 s at sf0.1.
+    # - the group exchange is provided EXPLICITLY, sized to the events
+    #   rows in the Python cost class, instead of letting
+    #   ENSURE_REQUIREMENTS + AQE size it: AQE coalesces by BYTES (the
+    #   skinny shuffle lands at ~2 partitions), but the stage cost is
+    #   per-row Python, so task count — not partition size — is what
+    #   matters. groupBy reuses this exchange (same key), so no extra
+    #   shuffle; measured 4.5 → 0.7 s at sf0.1.
+    width = task_count(spark, _scan_meta(sf, "events")[1], "python")
     return (
         e.select("event_id", "user_id", "value")
-        .repartition(py_stage_partitions(spark), "user_id")
+        .repartition(width, "user_id")
         .groupBy("user_id")
         .applyInPandas(
             zscore, schema="event_id long, user_id long, zscore double"
@@ -635,13 +638,16 @@ def udaf_pandas_window(spark: SparkSession, sf: str) -> DataFrame:
         return float((np.nanmin(vv) + np.nanmax(vv)) / 2.0)
 
     e = load_table(spark, sf, "events")
-    # Provide the window's user_id exchange explicitly at the core count:
-    # the per-frame Python round trips are the cost, and AQE's byte-based
-    # coalescing of the ENSURE_REQUIREMENTS shuffle ran this stage on ~2
-    # partitions. The window reuses this exchange (same key); frames are
-    # totally ordered per user, so values are identical under any
-    # partitioning. Measured 5.9 → 1.6 s at sf0.1.
-    e = e.repartition(py_stage_partitions(spark), "user_id")
+    # Provide the window's user_id exchange explicitly, sized to the
+    # events rows in the Python cost class: the per-frame Python round
+    # trips are the cost, and AQE's byte-based coalescing of the
+    # ENSURE_REQUIREMENTS shuffle ran this stage on ~2 partitions. The
+    # window reuses this exchange (same key); frames are totally ordered
+    # per user, so values are identical under any partitioning. Measured
+    # 5.9 → 1.6 s at sf0.1.
+    e = e.repartition(
+        task_count(spark, _scan_meta(sf, "events")[1], "python"), "user_id"
+    )
     w = (
         _W.partitionBy("user_id")
         .orderBy("ts", "event_id")

@@ -32,6 +32,7 @@ from datapipelines_python_spark.operators._helpers import (
     sql_davg,
     sql_dsum,
     sql_round4,
+    task_count,
 )
 from datapipelines_python_spark.operators.llm import sql_dot
 from datapipelines_python_spark.registry import query
@@ -74,7 +75,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
     o = load_table(spark, sf, "orders").filter(F.col("o_orderdate") < "1998-03-15")
     li = spread(
         load_table(spark, sf, "lineitem").filter(F.col("l_shipdate") > "1998-03-15"),
-        "l_orderkey", sf=sf, table="lineitem", rows_per_task=75_000,
+        "l_orderkey", sf=sf, table="lineitem", cost="join_chain",
     )
     agg = (
         c.join(o, c.c_custkey == o.o_custkey)
@@ -151,7 +152,7 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf: str) -> DataFrame:
     )
     li = spread(
         load_table(spark, sf, "lineitem"), "l_orderkey", sf=sf, table="lineitem",
-        rows_per_task=75_000,
+        cost="join_chain",
     )
     s = load_table(spark, sf, "supplier")
     joined = (
@@ -328,7 +329,7 @@ def tpch_q18_large_volume_customer(spark: SparkSession, sf: str) -> DataFrame:
     only qualifying orders shuffle onward."""
     li = spread(
         load_table(spark, sf, "lineitem"), "l_orderkey", sf=sf, table="lineitem",
-        rows_per_task=75_000,
+        cost="join_chain",
     )
     o = load_table(spark, sf, "orders")
     c = load_table(spark, sf, "customer")
@@ -577,7 +578,7 @@ def tpch_q9_product_type_profit(spark: SparkSession, sf: str) -> DataFrame:
     p = load_table(spark, sf, "part").filter(F.col("p_name").like("%red%"))
     li = spread(
         load_table(spark, sf, "lineitem"), "l_orderkey", sf=sf, table="lineitem",
-        rows_per_task=75_000,
+        cost="join_chain",
     )
     s = load_table(spark, sf, "supplier")
     o = load_table(spark, sf, "orders")
@@ -753,7 +754,7 @@ def tpch_q16_parts_supplier_relationship(spark: SparkSession, sf: str) -> DataFr
     # and the serial lineitem scan parallelizes for free.
     li = spread(
         load_table(spark, sf, "lineitem"), "l_partkey", sf=sf,
-        table="lineitem", rows_per_task=75_000,
+        table="lineitem", cost="join_chain",
     )
     ps = li.select("l_partkey", "l_suppkey").distinct()
     p = load_table(spark, sf, "part").filter(
@@ -887,7 +888,7 @@ def tpch_q21_suppliers_kept_waiting(spark: SparkSession, sf: str) -> DataFrame:
     # satisfies the (l_orderkey, l_suppkey) clustering).
     li = spread(
         load_table(spark, sf, "lineitem"), "l_orderkey", sf=sf, table="lineitem",
-        rows_per_task=150_000,
+        cost="join_chain",
     )
     j = li.join(o, li.l_orderkey == o.o_orderkey).withColumn(
         "is_late",
@@ -955,7 +956,7 @@ def tpch_q2_minimum_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     # and the serial lineitem scan parallelizes for free.
     li = spread(
         load_table(spark, sf, "lineitem"), "l_partkey", sf=sf,
-        table="lineitem", rows_per_task=75_000,
+        table="lineitem", cost="join_chain",
     )
     ps = li.select("l_partkey", "l_suppkey").distinct()
     n = load_table(spark, sf, "nation")
@@ -1512,7 +1513,7 @@ def workload_basket_affinity(spark: SparkSession, sf: str) -> DataFrame:
     # and the single-row-group scan fans out at the same time.
     li = spread(
         load_table(spark, sf, "lineitem"), "l_orderkey", sf=sf, table="lineitem",
-        rows_per_task=75_000,
+        cost="join_chain",
     )
     items = li.select("l_orderkey", "l_partkey").distinct()
     # Denominator as a broadcast 1-row aggregate instead of an eager
@@ -2582,8 +2583,7 @@ def workload_pareto_share(spark: SparkSession, sf: str) -> DataFrame:
     # parallelizes without adding an exchange; decimal sum is
     # order-independent.
     o = spread(
-        load_table(spark, sf, "orders"), "o_custkey", sf=sf, table="orders",
-        rows_per_task=20_000,
+        load_table(spark, sf, "orders"), "o_custkey", sf=sf, table="orders"
     )
     rev = o.groupBy("o_custkey").agg(dsum(F.col("o_totalprice")).alias("revenue"))
     w = W.partitionBy().orderBy(F.desc("revenue"), F.asc("o_custkey"))
@@ -2715,8 +2715,7 @@ def ml_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     # Round 10: the unconditional repartition became the conditional
     # ``spread`` (same key, same count) — identical here, literal no-op
     # once the layout already feeds the cores.
-    emb = spread(emb, "vec_id", sf=sf, table="embeddings",
-                 rows_per_task=64)
+    emb = spread(emb, "vec_id", sf=sf, table="embeddings", cost="vector")
     ex = emb.select(
         F.posexplode("embedding").alias("p", "xf")
     ).select(
@@ -4997,7 +4996,7 @@ _SQL_MUTUAL_5NN = """
 """
 
 
-_COSINE_PAIRS_CACHE: dict[tuple[str, str, str, int], DataFrame] = {}
+_COSINE_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 # Every consumer of _cosine_pairs takes at most a per-u top-5 (mutual-5NN
 # edges, LOO-kNN votes, hubness k-occurrence) or top-3-per-label-subset
@@ -5015,24 +5014,6 @@ def _knn_mode() -> str:
     import os
 
     return os.environ.get("SPARK_GRAFT_KNN_CANDIDATES", "exact")
-
-
-def _knn_build_shards() -> int:
-    """Number of broadcast-sized row blocks the exact-kNN build side is
-    sharded into (SPARK_GRAFT_KNN_BUILD_SHARDS, default 1). This is the
-    executable form of the 100 TB plan in ``_exact_pairs_blocked``'s
-    docstring: when the build matrix no longer fits one broadcast, split
-    it into S contiguous row blocks, run the identical per-block kernel
-    against the full query side once per block, and let the existing
-    pooled re-window take the global top-K of the per-block top-Ks.
-    Bit-exact for any S (tests/test_knn_family.py pins S ∈ {1, 4}): each
-    (q, v) cosine is the same sequential per-dimension fold regardless of
-    which block v lands in, and global top-K ⊆ union of per-block top-Ks
-    because any globally-ranked row ranks at least as high within its own
-    block."""
-    import os
-
-    return max(1, int(os.environ.get("SPARK_GRAFT_KNN_BUILD_SHARDS", "1")))
 
 
 # Exact-kNN build-side budget (VERDICT r9 #5 — the collect adjudication,
@@ -5087,10 +5068,7 @@ def _cosine_pairs(spark: SparkSession, sf: str) -> DataFrame:
     far higher on real clustered embeddings). The registered oracles replay
     the exact mode, so 'ann' is opt-in for scale runs, not the checked
     default."""
-    key = (
-        spark.sparkContext.applicationId, sf, _knn_mode(),
-        _knn_build_shards(),
-    )
+    key = (spark.sparkContext.applicationId, sf, _knn_mode())
     cached = _COSINE_PAIRS_CACHE.get(key)
     if cached is not None:
         if not cached.storageLevel.useMemory:  # re-pin after clearCache()
@@ -5174,15 +5152,14 @@ def _exact_pairs_blocked(spark: SparkSession, emb: DataFrame) -> DataFrame:
     auto-sharded into ≤64 MiB contiguous broadcast blocks — the
     identical kernel runs once per block and the pooled re-window below
     takes the global top-K of the per-block top-Ks, bit-exact for any S
-    (pinned at S ∈ {1, 4} and under forced auto-sharding in
+    (pinned under forced 4-block auto-sharding in
     tests/test_knn_family.py): per-pair folds don't depend on block
     membership, and a globally-ranked row always survives its own
     block's top-K. Past the budget the kernel REFUSES with
     ``UnsupportedError`` naming the scale path — exact kNN there is
     O(n²·d) compute before it is a memory problem, and the answer is
     ``SPARK_GRAFT_KNN_CANDIDATES=ann`` (sub-quadratic banded LSH,
-    recall measured and floor-pinned at sf1), not a bigger driver.
-    ``SPARK_GRAFT_KNN_BUILD_SHARDS`` still force-raises S for tests."""
+    recall measured and floor-pinned at sf1), not a bigger driver."""
     import numpy as np
     import pandas as pd
 
@@ -5344,15 +5321,13 @@ def _exact_pairs_blocked(spark: SparkSession, emb: DataFrame) -> DataFrame:
     # Build-side sharding (VERDICT r6 #4): S contiguous row blocks, one
     # full-query-side kernel pass per block, union of per-block top-Ks.
     # S=1 is the single-broadcast fast path; S>1 is the executable
-    # 100 TB shape for a build side too large for one broadcast. Since
-    # round 10 S is ALSO auto-raised so each broadcast block stays
-    # ≤ _KNN_SHARD_BYTES — between 64 MiB and the budget the kernel
-    # shards itself instead of relying on the env knob (bit-exact for
-    # any S, pinned at S ∈ {1, 4}). The invalid-id tail rides with
-    # shard 0.
-    auto_S = -(-est_bytes // _KNN_SHARD_BYTES)  # ceil
-    S = min(max(_knn_build_shards(), auto_S, 1), max(len(v_ids), 1))
-    par = max(spark.sparkContext.defaultParallelism, 1)
+    # 100 TB shape for a build side too large for one broadcast: S is
+    # raised so each broadcast block stays ≤ _KNN_SHARD_BYTES (bit-exact
+    # for any S, pinned under forced 4-block sharding). The invalid-id
+    # tail rides with shard 0. The query side runs in the ``vector``
+    # class's task count of its rows.
+    S = min(max(-(-est_bytes // _KNN_SHARD_BYTES), 1), max(len(v_ids), 1))
+    par = task_count(spark, int(est["n"] or 0), "vector")
     block_idx = np.array_split(np.arange(len(v_ids)), S)
     per_row = None
     for s_i, idx in enumerate(block_idx):
@@ -14071,12 +14046,13 @@ def workload_item_item_cf(spark: SparkSession, sf: str) -> DataFrame:
     # both self-join sides' u clustering, so the interaction build, the
     # dedup and the Σ basket² co-occurrence join all run off this single
     # fan-out of the serial fixture scan (exact no-op on a parallel
-    # layout, where the planner's own exchanges return).
+    # layout, where the planner's own exchanges return). Sized from the
+    # rows that reach it: the %5 catalog shard keeps a fifth of lineitem.
     inter = (
         spread(
             li.join(o, li.l_orderkey == o.o_orderkey)
             .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")),
-            "u", sf=sf, table="lineitem", rows_per_task=75_000,
+            "u", sf=sf, table="lineitem", cost="join_chain", weight=0.2,
         )
         .distinct()
     )
@@ -14390,7 +14366,7 @@ def workload_frequent_triples(spark: SparkSession, sf: str) -> DataFrame:
     # (guide §2.4) — and the serial fixture scan fans out with it.
     li = spread(
         load_table(spark, sf, "lineitem"), "l_orderkey", sf=sf, table="lineitem",
-        rows_per_task=75_000,
+        cost="join_chain",
     )
     p = load_table(spark, sf, "part")
     basket = (

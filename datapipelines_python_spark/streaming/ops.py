@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapipelines_python_spark.catalog import load_table, read_parquet
-from datapipelines_python_spark.operators._helpers import sql_dsum
+from datapipelines_python_spark.operators._helpers import sql_dsum, task_count
 from datapipelines_python_spark.operators.scans import scratch_dir
 from datapipelines_python_spark.registry import query
 
@@ -134,64 +134,34 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def stream_state_partitions(
-    spark: SparkSession, sf: str | None = None, python_state: bool = False
+    spark: SparkSession, sf: str, python_state: bool = False
 ) -> int:
-    """Shuffle-partition count for streaming state, sized deliberately.
+    """Shuffle-partition count for streaming state: :func:`task_count`
+    of the replayed ``events`` bytes.
 
     Unlike batch, this value is BAKED into the checkpoint at the first
     micro-batch — Spark cannot resize streaming state later — so it is a
-    real capacity decision, not a tuning default. At fixture scale the
-    batch default (32) meant every stateful micro-batch scheduled 32
-    state-store tasks over a few thousand rows; 18 digest members × 4
-    micro-batches made that the single largest line in the sf0.1 profile
-    (digest_stream 130 s, VERDICT r7 "Next round" #4). 8 partitions carry
-    identical values (same keys, same aggregation) at a quarter of the
-    state-store commits. A 100 TB deployment sizes this once, up front,
-    to key cardinality × throughput — which is exactly the knob
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` exposes.
-
-    Round 10 makes the default SIZE-DERIVED instead of the flat 8: one
-    state partition per 8 MB of the replayed events input (floor 1, cap
-    at the configured shuffle width). Measured motivation: every run of
-    a streaming op opens partitions × stateful-operators state-store
-    providers against a fresh checkpoint, and providers of finished
-    queries linger until the maintenance tick unloads them — so
-    back-to-back runs (bench min-of-3, the 18-member digest) accumulate
-    providers and slow down run over run (stream_join_then_window read
-    12.0/16.5/32.2 s across three consecutive runs at 8 partitions,
-    10.7/11.7 at 1). The derived default keeps values bit-identical
-    (keyed state; decimal sums) and scales with the data, not with the
-    local core count; real deployments still size capacity via the env
-    knob.
-
-    Round 11 adds ``python_state``: for stateful operators whose
-    per-batch work is per-GROUP PYTHON (applyInPandasWithState /
+    capacity decision. Every drain opens partitions × stateful-operators
+    state-store providers against a fresh checkpoint, and providers of
+    finished queries linger until the maintenance tick unloads them, so
+    a flat width (the batch default 32, later 8) made back-to-back runs
+    slow down run over run (stream_join_then_window 12.0/16.5/32.2 s at
+    8 partitions, 10.7/11.7 at 1). JVM state takes one partition per
+    8 MB of input (``jvm_state``). ``python_state`` marks operators
+    whose per-batch work is per-GROUP PYTHON (applyInPandasWithState /
     transformWithStateInPandas iterate a pandas frame per key per
-    micro-batch), partition count is worker parallelism, not state-store
-    byte budget — the same lesson as ``py_stage_partitions`` for batch.
-    Measured at sf0.1 (bench_one, min-of-2): stream_tws_fallback
-    15.0 s @ 1 partition → 5.2 @ 4 → 4.1 @ 8; stream_stateful_count
-    8.9 → 4.2 → 3.6. The JVM-state ops show the OPPOSITE gradient
-    (stream_join_then_window 5.6 @ 1 → 8.5 @ 8 — commit overhead), so
-    the Python sizing applies only where the flag is set. The divisor is
-    ~30× finer (256 KB of replayed input per partition vs 8 MB) —
-    the order of the measured per-row Python-vs-JVM cost gap (guide §4);
-    same floor/cap, env knob still wins."""
-    v = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if v:
-        return max(1, int(v))
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    per_part = (256 << 10) if python_state else (8 << 20)
-    if sf:
-        try:
-            nbytes = os.path.getsize(
-                os.path.join(sf.rstrip("/"), "events.parquet")
-            )
-        except OSError:
-            nbytes = None
-        if nbytes:
-            return max(1, min(cur, -(-nbytes // per_part)))
-    return min(cur, 8)
+    micro-batch): there the task count is worker parallelism, so the
+    ``python_state`` class is ~30× finer (256 KB per partition), the
+    order of the measured Python-vs-JVM per-row cost gap (guide §4).
+    Measured at sf0.1: stream_tws_fallback 15.0 s at 1 partition → 5.2
+    at 4; capping at the cores rather than the shuffle width (8 on a
+    4-core machine) took it from 8.7 to 6.3–7.1 s. The JVM-state
+    ops show the OPPOSITE gradient (stream_join_then_window 5.6 s at 1 →
+    8.5 at 8 — commit overhead). Values are bit-identical at any width
+    (keyed state, decimal sums); to A/B a width, override the class's
+    ``PER_TASK`` entry in-process."""
+    nbytes = os.path.getsize(os.path.join(sf.rstrip("/"), "events.parquet"))
+    return task_count(spark, nbytes, "python_state" if python_state else "jvm_state")
 
 
 class _state_sized:
@@ -201,8 +171,7 @@ class _state_sized:
     awaitTermination and the engine runs one query per session thread."""
 
     def __init__(
-        self, spark: SparkSession, sf: str | None = None,
-        python_state: bool = False,
+        self, spark: SparkSession, sf: str, python_state: bool = False
     ) -> None:
         self.spark = spark
         self.sf = sf
@@ -268,8 +237,8 @@ def unload_state_stores(spark: SparkSession) -> None:
 
 
 def drain_to_memory(
-    df: DataFrame, name: str, output_mode: str = "append",
-    sf: str | None = None, python_state: bool = False,
+    df: DataFrame, name: str, output_mode: str = "append", *,
+    sf: str, python_state: bool = False,
 ) -> DataFrame:
     """Run a streaming plan to completion (AvailableNow) into a memory
     sink and return the result as a batch DataFrame. ``python_state``

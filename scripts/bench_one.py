@@ -1,10 +1,10 @@
 """Time individual operators in isolation and capture their plans.
 
-Round-10 measurement harness (guide §1): per-op wall with the SAME
-hash-sink the bench charges (bit_xor of xxhash64 over every column, no
-driver materialization) plus an optional noop-sink lap, min-of-N after one
-warm run, and ``explain("formatted")`` dumped to a file so plan claims are
-checkable without running Spark.
+Round-10 measurement harness (guide §1): per-op wall from bench.py's own
+``time_op`` (one warm run, then N runs through the same hash sink the bench
+charges; min-of-N reported) plus an optional noop-sink lap, and
+``explain("formatted")`` dumped to a file so plan claims are checkable
+without running Spark.
 
 Usage:
     python scripts/bench_one.py --ops agg_groupby,tpch_q18_large_volume_customer \
@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from datapipelines_python_spark import get_registry, get_spark
 
 
@@ -40,17 +41,8 @@ def main() -> int:
     spark = get_spark(app_name="bench_one")
     registry = get_registry()
 
-    from pyspark.sql import functions as F
-
-    def consume(df) -> None:
-        df.select(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))
-        ).collect()
-
     names: list[str] = [n for n in args.ops.split(",") if n]
     if args.bench_suite:
-        import bench
-
         names = [n for n in bench.HEADLINE_ORDER if n in registry]
         for members in bench.FAMILY_BENCH.values():
             names += [n for n in members if n in registry and n not in names]
@@ -67,15 +59,8 @@ def main() -> int:
             )
             with open(f"{args.plans}/{name}_{args.suffix}.txt", "w") as fh:
                 fh.write(plan)
-        consume(spec.fn(spark, args.sf))  # warm
-        best = float("inf")
-        runs = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            consume(spec.fn(spark, args.sf))
-            dt = time.perf_counter() - t0
-            runs.append(round(dt, 3))
-            best = min(best, dt)
+        walls = bench.time_op(spark, spec.fn, args.sf, args.runs)
+        best, runs = min(walls), [round(w, 3) for w in walls]
         rec: dict = {"min": round(best, 3), "runs": runs}
         if args.noop:
             t0 = time.perf_counter()

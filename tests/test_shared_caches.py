@@ -19,10 +19,9 @@ def test_cosine_pairs_cached_per_session_and_sf(spark):
     a = _cosine_pairs(spark, SF_SMOKE)
     b = _cosine_pairs(spark, SF_SMOKE)
     assert a is b  # same DataFrame object — one build
-    # key gained a 4th element in round 7: the build-shard count
-    # (SPARK_GRAFT_KNN_BUILD_SHARDS, default 1) — two shard settings in
-    # one session must never share a cache entry
-    key = (spark.sparkContext.applicationId, SF_SMOKE, "exact", 1)
+    # (session, sf, candidate mode): the build-shard count is derived
+    # from the build size, so it is no longer part of the key
+    key = (spark.sparkContext.applicationId, SF_SMOKE, "exact")
     assert key in _COSINE_PAIRS_CACHE
 
 
