@@ -63,7 +63,8 @@ from datapipelines_python_spark import get_registry
 from datapipelines_python_spark.session import get_spark
 
 # Per-family representative sets (VERDICT r4 #4): the heaviest
-# non-headline ops per family in PROFILE_SF01.json — where a plan-shape
+# non-headline ops per family in the round-5 PROFILE_SF01.json (frozen
+# since; the regenerated profile did not re-pick them) — where a plan-shape
 # regression would cost the most wall. llm_hard_negative_mining (41 s, the
 # known O(n²)-candidate exact-kNN ceiling) is deliberately excluded: its
 # cost IS the documented scale-trade and would drown the family signal;

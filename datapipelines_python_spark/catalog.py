@@ -41,7 +41,8 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
     The driver has shipped ``events.ts`` both as TIMESTAMP(MICROS) (read
     natively) and as TIMESTAMP(NANOS) parquet, which Spark rejects outright
-    unless read as raw nanos via ``spark.sql.legacy.parquet.nanosAsLong``.
+    unless its footer is inferred with ``spark.sql.legacy.parquet.nanosAsLong``
+    on, which gives raw nanos (``read_parquet(..., nanos_as_long=True)``).
     When the column arrives as a raw LONG of epoch-nanos, convert with
     integer division (``DIV 1000`` — epoch-nanos ≈ 1.7e18 exceeds double's
     2^53, so float division would corrupt it). DuckDB truncates ns→µs the
@@ -63,8 +64,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # Session confs that change the schema Spark 4.1 infers from a parquet
 # footer: the ones ParquetToSparkSchemaConverter reads, plus the two that
 # decide which footers ParquetUtils.inferSchema reads.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 SCHEMA_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
+    NANOS_AS_LONG,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -109,7 +111,7 @@ def _listing(path: str) -> tuple | None:
     return tuple(sorted(files))
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str, nanos_as_long: bool = False) -> DataFrame:
     """``spark.read.parquet(path)`` without a schema-inference job per call.
 
     Plain ``spark.read.parquet`` runs a one-task Spark job to read the
@@ -118,17 +120,30 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     to later reads of the same files. A rewrite changes the listing, so a
     stale schema is never used; a miss replaces the path's entry, so
     rewriting one path never grows the memo. Paths ``os`` cannot list fall
-    through to plain inference."""
+    through to plain inference.
+
+    ``nanos_as_long`` infers as if ``spark.sql.legacy.parquet.nanosAsLong``
+    were on (TIMESTAMP(NANOS) columns as raw LONG nanos) without setting it
+    on ``spark``: the footer is read on a clone of the session that carries
+    its schema confs with the flag set, and ``spark`` reads with that
+    schema, which it accepts for a NANOS column whatever its own flag."""
     listing = _listing(path)
-    if listing is None:
-        return spark.read.parquet(path)
-    key = os.path.abspath(path)
-    confs = tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
+    confs = {k: spark.conf.get(k) for k in SCHEMA_CONFS}
+    if nanos_as_long:
+        confs[NANOS_AS_LONG] = "true"
+    key, values = os.path.abspath(path), tuple(confs.values())
     entry = _footer_schemas.get(key)
-    if entry is not None and entry[:2] == (confs, listing):
+    if listing is not None and entry is not None and entry[:2] == (values, listing):
         return spark.read.schema(entry[2]).parquet(path)
-    df = spark.read.parquet(path)
-    _footer_schemas[key] = (confs, listing, df.schema)
+    if nanos_as_long:
+        infer = spark.newSession()
+        for k, v in confs.items():
+            infer.conf.set(k, v)
+        df = spark.read.schema(infer.read.parquet(path).schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+    if listing is not None:
+        _footer_schemas[key] = (values, listing, df.schema)
     return df
 
 
@@ -140,8 +155,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(read_parquet(spark, table_path(sf_dir, name)))
+        return normalize_events_ts(
+            read_parquet(spark, table_path(sf_dir, name), nanos_as_long=True))
     return read_parquet(spark, table_path(sf_dir, name))
 
 

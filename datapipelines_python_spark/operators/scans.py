@@ -187,8 +187,7 @@ def scan_stream_files(spark: SparkSession, sf: str) -> DataFrame:
     Batch-equivalent check: the stream over the same files must produce the
     full table. (Unbounded variant differs only in the trigger.)
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, table_path(sf, "events")).schema
+    raw_schema = read_parquet(spark, table_path(sf, "events"), nanos_as_long=True).schema
     # The file stream source wants a directory; glob-filter the sf dir down
     # to the events table file.
     stream = normalize_events_ts(

@@ -249,9 +249,8 @@ class FixtureSource(TableSource):
             raise UnsupportedError(table)
         spark: SparkSession = context[PipelineContext.Keys.SPARK]
         sf = self.sf_dir.rstrip("/")
-        if table == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = read_parquet(spark, table_path(sf, table)).schema
+        schema = read_parquet(
+            spark, table_path(sf, table), nanos_as_long=table == "events").schema
         stream = (
             spark.readStream.schema(schema)
             .option("pathGlobFilter", f"{table}.parquet")

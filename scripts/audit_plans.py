@@ -77,10 +77,28 @@ _COUNTERS = {
 }
 
 
+def _session_state(spark) -> tuple:
+    """The session's conf (a JVM snapshot, compared in one call) and the
+    process environment."""
+    return spark._jsparkSession.conf().getAll(), dict(os.environ)
+
+
+def _session_diff(spark, before: tuple, after: tuple) -> dict:
+    """``{key: (before, after)}`` for each conf entry, and each ``env:``
+    variable, that differs between two :func:`_session_state` calls."""
+    if before[0].equals(after[0]) and before[1] == after[1]:
+        return {}
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    b, a = ({**dict(as_java(conf)), **{f"env:{k}": v for k, v in env.items()}}
+            for conf, env in (before, after))
+    return {k: (b.get(k), a.get(k)) for k in b.keys() | a.keys() if b.get(k) != a.get(k)}
+
+
 def walk(spark, sf: str, only=None) -> dict:
     """Build each non-digest operator once; per operator record
-    ``{"raw_schema", "schema", "plan"}`` (the canonical schema and the
-    executed-plan counters). Build failures land in ``errors``."""
+    ``{"raw_schema", "schema", "plan", "session_diff"}`` (the canonical
+    schema, the executed-plan counters, and what the build changed in the
+    caller's conf and environment). Build failures land in ``errors``."""
     reg = {n: s for n, s in get_registry().items() if "digest" not in s.tags}
     if only:
         unknown = set(only) - set(reg)
@@ -91,6 +109,7 @@ def walk(spark, sf: str, only=None) -> dict:
     for name, spec in reg.items():
         if only and name not in only:
             continue
+        before = _session_state(spark)
         try:
             raw = spec.raw_fn(spark, sf)
             df = canonicalize_df(raw)
@@ -100,7 +119,8 @@ def walk(spark, sf: str, only=None) -> dict:
             continue
         counts = {k: len(rx.findall(plan)) for k, rx in _COUNTERS.items()}
         counts["codegen"] = len(set(_COUNTERS["codegen"].findall(plan)))
-        out[name] = {"raw_schema": raw.schema, "schema": df.schema, "plan": counts}
+        out[name] = {"raw_schema": raw.schema, "schema": df.schema, "plan": counts,
+                     "session_diff": _session_diff(spark, before, _session_state(spark))}
     return {"sf": sf, "n_ops": len(out), "ops": out, "errors": errors}
 
 

@@ -72,17 +72,36 @@ def test_overwrites_keep_one_memo_entry(spark, scratch):
     assert os.path.abspath(os.path.join(scratch, "t")) in catalog._footer_schemas
 
 
+def nanos_session(spark):
+    """A clone of ``spark`` with ``nanosAsLong`` on; ``spark`` keeps its flag."""
+    clone = spark.newSession()
+    clone.conf.set(catalog.NANOS_AS_LONG, "true")
+    return clone
+
+
 @pytest.mark.parametrize("table", TABLES)
 def test_memoized_schema_equals_inferred(spark, table):
-    if table == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos = table == "events"
     path = table_path(SF_SMOKE, table)
-    inferred = spark.read.parquet(path).schema
-    read_parquet(spark, path)
+    inferred = (nanos_session(spark) if nanos else spark).read.parquet(path).schema
+    read_parquet(spark, path, nanos_as_long=nanos)
     with jobs_started(spark) as jobs:
-        memoized = read_parquet(spark, path).schema
+        memoized = read_parquet(spark, path, nanos_as_long=nanos).schema
     assert jobs == []  # served from the memo
     assert memoized == inferred
+
+
+def test_nanos_events_leave_the_flag_alone(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = 1_700_000_000_123_456_789
+    pq.write_table(pa.table({"ts": pa.array([ns], pa.timestamp("ns"))}), tmp_path / "events.parquet")
+    assert "timeUnit=nanoseconds" in str(pq.ParquetFile(tmp_path / "events.parquet").schema)
+    before = spark.conf.get(catalog.NANOS_AS_LONG)
+    got = load_table(spark, str(tmp_path), "events").select(F.unix_micros("ts")).first()
+    assert got[0] == ns // 1000  # truncated to micros, as DuckDB does
+    assert spark.conf.get(catalog.NANOS_AS_LONG) == before
 
 
 def test_conf_change_reinfers(spark):
@@ -106,7 +125,7 @@ def test_concurrent_reads_share_the_memo(spark):
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = nanos_session(spark)
     paths = [table_path(SF_SMOKE, t) for t in TABLES]
     inferred = {p: spark.read.parquet(p).schema for p in paths}
     for p in paths:

@@ -107,3 +107,11 @@ def test_whole_registry_plans_buildable(registry_walk):
     # digests are registered on top but walked as their members
     assert registry_walk["n_ops"] == 629
     assert len(get_registry()) == 637
+
+
+def test_builds_leave_the_session_alone(registry_walk):
+    # an operator's build must not change the caller's conf or environment:
+    # another query on the same session would answer differently after it
+    changed = {n: r["session_diff"] for n, r in registry_walk["ops"].items()
+               if r["session_diff"]}
+    assert changed == {}
