@@ -32,6 +32,7 @@ from datapipelines_python_spark.operators._helpers import (
     sql_dsum,
     sql_round4,
 )
+from datapipelines_python_spark.operators.knn import EdgeSource, knn_twins
 from datapipelines_python_spark.operators.llm import dot, sql_dot
 from datapipelines_python_spark.registry import query
 
@@ -478,7 +479,7 @@ _SQL_NBITS = (
 # sf1 for (1+E)× candidate work (scripts/recall_sf1.py); round 10 adds
 # the Hamming-2 probes below for the single-table dedup sweep, lifting
 # it to 0.248 — past the 0.143 sf0.1 pin. The 8-band generator in
-# workloads._ann_candidates is the kNN-grade twin and recovers its full
+# knn._ann_candidates is the kNN-grade twin and recovers its full
 # recall under the single-bit probe rule alone. E = 0 at every
 # n ≤ 2000 fixture, so the probe set degenerates to {home} and all
 # sub-sf1 values, walls and oracle pins are unchanged; both engines
@@ -2755,27 +2756,17 @@ def llm_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "llm_hard_negative_mining",
-    oracle="""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding, label,
-                   SQRT(list_reduce(list_prepend(0.0,
-                        list_transform(list_zip(embedding, embedding),
-                                       s -> CAST(s[1] AS DOUBLE) * s[2])),
-                        (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS anchor_id, a.label AS anchor_label,
-                   b.vec_id AS negative_id,
-                   FLOOR((list_reduce(list_prepend(0.0,
-                          list_transform(list_zip(a.embedding, b.embedding),
-                                         s -> CAST(s[1] AS DOUBLE) * s[2])),
-                          (acc, x) -> acc + x) / (a.norm * b.norm))
-                         * 10000.0 + 0.5) / 10000.0 AS cos_sim
-            FROM nv a JOIN nv b
-              ON a.vec_id <> b.vec_id AND a.label <> b.label
+    """
+        lab AS (SELECT vec_id, label FROM embeddings),
+        neg AS (
+            SELECT s.u AS anchor_id, la.label AS anchor_label,
+                   s.v AS negative_id, s.c AS cos_sim
+            FROM p s
+            JOIN lab la ON s.u = la.vec_id
+            JOIN lab lb ON s.v = lb.vec_id
+            WHERE la.label <> lb.label
         )
         SELECT anchor_id, CAST(anchor_label AS INT) AS anchor_label,
                negative_id, cos_sim, CAST(rn AS INT) AS neg_rank
@@ -2783,12 +2774,12 @@ def llm_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
             SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
                                          ORDER BY cos_sim DESC,
                                                   negative_id) AS rn
-            FROM p
+            FROM neg
         ) r WHERE rn <= 3
     """,
-    tags=("llm", "similarity", "training"),
+    ("llm", "similarity", "training"),
 )
-def llm_hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
+def llm_hard_negative_mining(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Hard-negative mining for contrastive/retrieval training: for every
     anchor vector, the 3 most cosine-similar vectors bearing a DIFFERENT
     label — the near-misses that produce useful gradient, vs easy random
@@ -2797,16 +2788,15 @@ def llm_hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
     neighbor machinery, opposite selection predicate: closest
     *wrong*-label instead of majority label).
 
-    The label-mismatch predicate rides the pair join itself, so same-label
-    pairs are never scored. At 100 TB the candidate pairs come from the
-    ANN bucket joins (``llm_ann_lsh_bucketed`` / ``llm_ann_ivf``) with
-    this op's rank-and-take-3 stage unchanged on the n×k candidate table;
-    the n² join below is the fixture-scale oracle formulation."""
-    from datapipelines_python_spark.operators.workloads import _cosine_pairs
-
+    The label filter and rank-and-take-3 run on the source's candidate
+    pairs: the exact top-64 table (its margin over the top-3 cross-label
+    depth is pinned in tests/test_knn_family.py) or, for
+    ``llm_hard_negative_mining_ann``, every banded sign-LSH candidate —
+    the mining pass as it runs at 100 TB, never n². Label lookups
+    broadcast (the label table is two thin columns)."""
     lab = load_table(spark, sf, "embeddings").select("vec_id", "label")
     p = (
-        _cosine_pairs(spark, sf)
+        src.pairs(spark, sf)
         .join(
             F.broadcast(lab.select(F.col("vec_id").alias("u"),
                                    F.col("label").alias("la"))), "u"

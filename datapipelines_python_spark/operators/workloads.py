@@ -32,8 +32,8 @@ from datapipelines_python_spark.operators._helpers import (
     sql_davg,
     sql_dsum,
     sql_round4,
-    task_count,
 )
+from datapipelines_python_spark.operators.knn import ANN, EdgeSource, knn_twins
 from datapipelines_python_spark.operators.llm import sql_dot
 from datapipelines_python_spark.registry import query
 
@@ -1878,32 +1878,9 @@ def workload_gap_fill_calendar(spark: SparkSession, sf: str) -> DataFrame:
         F.coalesce(F.col("sv"), F.lit(0.0)).alias("sum_value"),
     )
 
-@query(
+@knn_twins(
     "graph_triangle_count",
-    oracle="""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT(list_reduce(list_prepend(0.0, list_transform(list_zip(embedding, embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS u, b.vec_id AS v,
-                   FLOOR((list_reduce(list_prepend(0.0, list_transform(list_zip(a.embedding, b.embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x) / (a.norm * b.norm)) * 10000.0 + 0.5) / 10000.0 AS c
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
-        topk AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT u, v,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY u ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
-        ),
-        mutual AS MATERIALIZED (
-            SELECT x.u, x.v
-            FROM topk x JOIN topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        )
+    """
         SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nv) AS n_nodes,
                (SELECT CAST(COUNT(*) AS BIGINT) FROM mutual) AS n_edges,
                (SELECT CAST(COUNT(*) AS BIGINT)
@@ -1911,9 +1888,9 @@ def workload_gap_fill_calendar(spark: SparkSession, sf: str) -> DataFrame:
                 JOIN mutual e2 ON e1.v = e2.u
                 JOIN mutual e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles
     """,
-    tags=("workload", "graph", "similarity"),
+    ("workload", "graph", "similarity"),
 )
-def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
+def graph_triangle_count(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Triangle counting over the mutual-5-NN cosine graph of the
     embedding corpus — the standard diagnostic for ANN-graph quality
     (triangle density ~ how clusterable the corpus is; near-zero means
@@ -1922,11 +1899,11 @@ def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     self-join e1(a,b) JOIN e2(b,c) JOIN e3(a,c), the degree-ordered
     formulation whose fan-out is bounded by edges x max-degree (<= k=5
     here) instead of degree^2 — at 100 TB the kNN edge list (n*k rows)
-    is the *input*, produced by the bucketed ANN path
-    (``llm_ann_lsh_bucketed``), never the O(n^2) product used for the
-    fixture-scale oracle. Ranking on round4(cosine) with vec_id
+    is the *input*, produced by the banded sign-LSH source of
+    ``graph_triangle_count_ann``, never the O(n^2) product of the exact
+    source. Ranking on round4(cosine) with vec_id
     tie-break keeps neighbor sets engine-exact."""
-    mutual = _mutual_5nn(spark, sf)
+    mutual = src.mutual(spark, sf)
     nv = load_table(spark, sf, "embeddings").select("vec_id")
     n_nodes = nv.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
     n_edges = mutual.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
@@ -2364,32 +2341,9 @@ def workload_ship_lag(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "graph_khop_reach",
-    oracle="""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT(list_reduce(list_prepend(0.0, list_transform(list_zip(embedding, embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS u, b.vec_id AS v,
-                   FLOOR((list_reduce(list_prepend(0.0, list_transform(list_zip(a.embedding, b.embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x) / (a.norm * b.norm)) * 10000.0 + 0.5) / 10000.0 AS c
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
-        topk AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT u, v,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY u ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
-        ),
-        mutual AS MATERIALIZED (
-            SELECT x.u, x.v
-            FROM topk x JOIN topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        ),
+    """
         adj AS MATERIALIZED (
             SELECT u AS src, v AS dst FROM mutual
             UNION ALL
@@ -2416,9 +2370,9 @@ def workload_ship_lag(spark: SparkSession, sf: str) -> DataFrame:
                    FROM reach WHERE dst <> seed GROUP BY seed) c2
                ON c2.seed = s.seed
     """,
-    tags=("workload", "graph", "similarity"),
+    ("workload", "graph", "similarity"),
 )
-def graph_khop_reach(spark: SparkSession, sf: str) -> DataFrame:
+def graph_khop_reach(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """2-hop BFS frontier over the mutual-5NN cosine graph from a
     deterministic seed set (vec_id % 97 = 0): per seed, the 1-hop degree
     and the distinct ≤2-hop reach — the expansion-rate diagnostic for
@@ -2426,10 +2380,10 @@ def graph_khop_reach(spark: SparkSession, sf: str) -> DataFrame:
     expressed as two self-joins on the adjacency list with a distinct
     between hops (frontier dedup — without it, fan-out multiplies rather
     than unions); k bounds each hop's fan-out at ×5, so an h-hop frontier
-    costs ≤ seeds·k^h rows, never a full-graph traversal. The O(n²) kNN
-    build is fixture-scale oracle machinery — at 100 TB the edge list
-    arrives from the bucketed ANN path (see `graph_triangle_count`)."""
-    mutual = _mutual_5nn(spark, sf)
+    costs ≤ seeds·k^h rows, never a full-graph traversal. The exact
+    O(n²) kNN source is fixture-scale — at 100 TB the edge list arrives
+    from the ANN source (``graph_khop_reach_ann``)."""
+    mutual = src.mutual(spark, sf)
     nv = load_table(spark, sf, "embeddings").select("vec_id")
     adj = mutual.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         mutual.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -3475,34 +3429,15 @@ def workload_queue_depth(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "ml_knn_classifier",
-    oracle="""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding, label,
-                   SQRT(list_reduce(list_prepend(0.0,
-                        list_transform(list_zip(embedding, embedding),
-                                       s -> CAST(s[1] AS DOUBLE) * s[2])),
-                        (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS q, a.label AS label_actual,
-                   b.label AS label_n,
-                   FLOOR((list_reduce(list_prepend(0.0,
-                          list_transform(list_zip(a.embedding, b.embedding),
-                                         s -> CAST(s[1] AS DOUBLE) * s[2])),
-                          (acc, x) -> acc + x) / (a.norm * b.norm))
-                         * 10000.0 + 0.5) / 10000.0 AS c,
-                   b.vec_id AS v
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
+    """
+        lab AS (SELECT vec_id, label FROM embeddings),
         knn AS MATERIALIZED (
-            SELECT q, label_actual, label_n FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY q
-                                             ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
+            SELECT t.u AS q, la.label AS label_actual, lb.label AS label_n
+            FROM topk t
+            JOIN lab la ON t.u = la.vec_id
+            JOIN lab lb ON t.v = lb.vec_id
         ),
         votes AS (
             SELECT q, label_actual, label_n,
@@ -3527,9 +3462,9 @@ def workload_queue_depth(spark: SparkSession, sf: str) -> DataFrame:
                    AS accuracy
         FROM pred GROUP BY label_actual
     """,
-    tags=("ml", "similarity", "eval"),
+    ("ml", "similarity", "eval"),
 )
-def ml_knn_classifier(spark: SparkSession, sf: str) -> DataFrame:
+def ml_knn_classifier(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Leave-one-out 5-NN majority-vote classification over the embedding
     corpus, scored per true label — the standard embedding-quality probe
     (high kNN accuracy ⇒ labels are cosine-separable; the trainable-model
@@ -3537,15 +3472,15 @@ def ml_knn_classifier(spark: SparkSession, sf: str) -> DataFrame:
     Votes tie-break by (count desc, label asc) and neighbors by
     (round4 cosine desc, vec_id), so predictions are engine-exact.
 
-    The n² pair stage is the fixture-scale oracle formulation only; at
-    100 TB the neighbor lists come from the bucketed ANN path
-    (``llm_ann_lsh_bucketed`` / ``llm_ann_ivf``) and this op's vote +
-    score stages consume the n×k edge table unchanged — classification
-    cost is the ANN cost, voting is two narrow aggregates."""
+    The vote and score stages consume the n×5 top-5 edge table of
+    either source unchanged — classification cost is the neighbor-search
+    cost, voting is two narrow aggregates. Under the ANN source, anchors
+    whose buckets yield no candidates simply have no vote rows on either
+    engine."""
     lab = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    pairs = _cosine_pairs(spark, sf)
-    p = (
-        pairs.join(
+    knn = (
+        src.top5(spark, sf)
+        .join(
             F.broadcast(lab.select(F.col("vec_id").alias("u"),
                                    F.col("label").alias("label_actual"))), "u"
         )
@@ -3553,17 +3488,7 @@ def ml_knn_classifier(spark: SparkSession, sf: str) -> DataFrame:
             F.broadcast(lab.select(F.col("vec_id").alias("v"),
                                    F.col("label").alias("label_n"))), "v"
         )
-        .select(F.col("u").alias("q"), "label_actual", "label_n", "c", "v")
-    )
-    knn = (
-        p.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("q").orderBy(F.desc("c"), F.asc("v"))
-            ),
-        )
-        .filter(F.col("rn") <= 5)
-        .select("q", "label_actual", "label_n")
+        .select(F.col("u").alias("q"), "label_actual", "label_n")
     )
     votes = knn.groupBy("q", "label_actual", "label_n").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_votes")
@@ -3692,39 +3617,9 @@ def workload_peak_detection(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "graph_link_prediction",
-    oracle="""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT(list_reduce(list_prepend(0.0,
-                        list_transform(list_zip(embedding, embedding),
-                                       s -> CAST(s[1] AS DOUBLE) * s[2])),
-                        (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS u, b.vec_id AS v,
-                   FLOOR((list_reduce(list_prepend(0.0,
-                          list_transform(list_zip(a.embedding, b.embedding),
-                                         s -> CAST(s[1] AS DOUBLE) * s[2])),
-                          (acc, x) -> acc + x) / (a.norm * b.norm))
-                         * 10000.0 + 0.5) / 10000.0 AS c
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
-        topk AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT u, v,
-                       ROW_NUMBER() OVER (PARTITION BY u
-                                          ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
-        ),
-        mutual AS MATERIALIZED (
-            SELECT x.u, x.v FROM topk x
-            JOIN topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        ),
+    """
         adj AS MATERIALIZED (
             SELECT u, v FROM mutual UNION ALL SELECT v, u FROM mutual
         ),
@@ -3754,9 +3649,9 @@ def workload_peak_detection(spark: SparkSession, sf: str) -> DataFrame:
             FROM cand
         ) WHERE rnk <= 20
     """,
-    tags=("workload", "graph", "similarity"),
+    ("workload", "graph", "similarity"),
 )
-def graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
+def graph_link_prediction(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Common-neighbor link prediction on the mutual-5NN cosine graph:
     score every NON-adjacent pair that shares >= 1 neighbor by Jaccard of
     neighborhoods (|N(u) ∩ N(v)| / |N(u) ∪ N(v)|) and return the top-20
@@ -3767,11 +3662,11 @@ def graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     The candidate set comes from the wedge join (adj ⋈ adj on the shared
     endpoint, u < v) — candidates are pairs at distance exactly 2, never
     all pairs, so cost is Σ deg² over nodes (bounded by n·k² for a kNN
-    graph, k=5), with existing edges anti-joined away. The n² cosine
-    stage below it is the fixture-scale oracle path; at 100 TB the edge
-    list arrives from the bucketed ANN ops and everything from ``adj``
-    down is unchanged."""
-    mutual = _mutual_5nn(spark, sf)
+    graph, k=5), with existing edges anti-joined away. The exact n²
+    cosine source is fixture-scale; at 100 TB the edge list arrives from
+    the ANN source (``graph_link_prediction_ann``) and everything from
+    ``adj`` down is unchanged."""
+    mutual = src.mutual(spark, sf)
     adj = mutual.unionAll(mutual.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     wedge = (
@@ -4178,39 +4073,9 @@ def workload_sessionized_conversion(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "graph_assortativity",
-    oracle="""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT(list_reduce(list_prepend(0.0,
-                        list_transform(list_zip(embedding, embedding),
-                                       s -> CAST(s[1] AS DOUBLE) * s[2])),
-                        (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS u, b.vec_id AS v,
-                   FLOOR((list_reduce(list_prepend(0.0,
-                          list_transform(list_zip(a.embedding, b.embedding),
-                                         s -> CAST(s[1] AS DOUBLE) * s[2])),
-                          (acc, x) -> acc + x) / (a.norm * b.norm))
-                         * 10000.0 + 0.5) / 10000.0 AS c
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
-        topk AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT u, v,
-                       ROW_NUMBER() OVER (PARTITION BY u
-                                          ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
-        ),
-        mutual AS MATERIALIZED (
-            SELECT x.u, x.v FROM topk x
-            JOIN topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        ),
+    """
         adj AS MATERIALIZED (
             SELECT u, v FROM mutual UNION ALL SELECT v, u FROM mutual
         ),
@@ -4237,9 +4102,9 @@ def workload_sessionized_conversion(spark: SparkSession, sf: str) -> DataFrame:
                      * 10000.0 + 0.5) / 10000.0 AS assortativity
         FROM s
     """,
-    tags=("workload", "graph"),
+    ("workload", "graph"),
 )
-def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
+def graph_assortativity(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Degree assortativity of the mutual-5NN cosine graph: Pearson
     correlation of endpoint degrees over the directed edge list — positive
     means hubs link to hubs (hub-dominated similarity structure, an ANN
@@ -4250,7 +4115,7 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     so the correlation inputs are exact doubles and both engines evaluate
     one identical closed-form expression — the same five-power-sums
     discipline as ``ml_ols_regression``."""
-    mutual = _mutual_5nn(spark, sf)
+    mutual = src.mutual(spark, sf)
     adj = mutual.unionAll(
         mutual.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -4969,687 +4834,11 @@ def ml_gbt_stumps(spark: SparkSession, sf: str) -> DataFrame:
     return row1.unionByName(row2)
 
 
-_SQL_MUTUAL_5NN = """
-        nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT(list_reduce(list_prepend(0.0, list_transform(list_zip(embedding, embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS u, b.vec_id AS v,
-                   FLOOR((list_reduce(list_prepend(0.0, list_transform(list_zip(a.embedding, b.embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x) / (a.norm * b.norm)) * 10000.0 + 0.5) / 10000.0 AS c
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
-        topk AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT u, v,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY u ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
-        ),
-        mutual AS MATERIALIZED (
-            SELECT x.u, x.v
-            FROM topk x JOIN topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        )
-"""
-
-
-_COSINE_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-# Every consumer of _cosine_pairs takes at most a per-u top-5 (mutual-5NN
-# edges, LOO-kNN votes, hubness k-occurrence) or top-3-per-label-subset
-# (hard-negative mining, 10 labels). K=64 leaves a >10x margin for the
-# label-subset case (tests/test_knn_family.py pins the margin), while
-# shrinking the materialized/persisted table from n(n-1) rows to 64n and
-# every downstream window's shuffle with it.
-_KNN_TOPK = 64
-_ANN_BANDS = 8  # sign-LSH candidate mode: 8 bands ...
-_ANN_BITS = 6  # ... of 6 sign bits each (64 buckets/band)
-
-
-def _knn_mode() -> str:
-    """'exact' (default) or 'ann' (sign-LSH banded candidates)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_KNN_CANDIDATES", "exact")
-
-
-# Exact-kNN build-side budget (VERDICT r9 #5 — the collect adjudication,
-# made executable): the driver materialize + broadcast in
-# ``_exact_pairs_blocked`` is only the right plan while the build side is
-# PROVABLY bounded, so the kernel now measures it first and refuses —
-# with the scale path spelled out — rather than silently OOMing the
-# driver on a corpus the exact mode was never the answer for. Exact kNN
-# at 100 TB is off the table for COMPUTE reasons before memory ones
-# (O(n²·d) scoring; no layout fixes that), which is why the sanctioned
-# escalation ladder is: single broadcast (≤64 MiB) → auto-sharded
-# broadcasts (bit-exact for any S, pinned) → hard stop pointing at
-# SPARK_GRAFT_KNN_CANDIDATES=ann, the sub-quadratic generator whose
-# recall is measured and floor-pinned at sf1 (SCALE.md §§22-23).
-_KNN_SHARD_BYTES = 64 << 20  # one broadcast block ≈ 64 MiB of float64
-
-
-def _knn_exact_build_budget_bytes() -> int:
-    """Max estimated build-side bytes the exact kernel may collect
-    (SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB, default 1024). Read per call;
-    malformed values fall back to the default."""
-    import os
-
-    try:
-        mb = int(os.environ.get("SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB", "1024"))
-    except ValueError:
-        mb = 1024
-    return max(1, mb) << 20
-
-
-def _cosine_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact per-u top-K (K=64) cosine neighbor table (u, v, round4 c) of
-    the embedding corpus — the shared edge source behind the whole
-    kNN-graph/mining family, built and persisted once per (session, sf).
-
-    Scale shape: the O(n²·d) candidate *compute* is irreducible for exact
-    kNN on this corpus (the fixture embeddings are isotropic — mean pair
-    cosine ≈ 0, top-5 neighbors at cos ≈ 0.32 — where no LSH/IVF bucket
-    family reaches recall 1 sub-quadratically), but since round 6 it runs
-    as a blocked Arrow-batched numpy kernel (``_exact_pairs_blocked``):
-    broadcast build side, m×n similarity blocks, only per-u top-K rows
-    ever leave Python — 41 s → ~4 s one-time at sf0.1 vs the old theta
-    self-join whose per-pair HOF-lambda dots dominated the registry's
-    profile. What is shuffled, persisted and re-consumed by the 13
-    downstream ops is K·n rows, not n².
-
-    At 100 TB exact kNN is off the table entirely; set
-    ``SPARK_GRAFT_KNN_CANDIDATES=ann`` to swap the candidate generator for
-    banded sign-LSH buckets (8 bands × 6 sign bits): candidate cost drops
-    to Σ bucket², downstream plans are unchanged, and recall becomes the
-    documented ANN trade (~1/3 top-5 recall on these isotropic fixtures;
-    far higher on real clustered embeddings). The registered oracles replay
-    the exact mode, so 'ann' is opt-in for scale runs, not the checked
-    default."""
-    key = (spark.sparkContext.applicationId, sf, _knn_mode())
-    cached = _COSINE_PAIRS_CACHE.get(key)
-    if cached is not None:
-        if not cached.storageLevel.useMemory:  # re-pin after clearCache()
-            cached.persist()
-        return cached
-    from datapipelines_python_spark.operators.llm import dot
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    if _knn_mode() == "ann":
-        nv = emb.select(
-            "vec_id", "embedding",
-            F.sqrt(dot("embedding", "embedding")).alias("norm"),
-        )
-        scored = _ann_candidates(nv).select(
-            F.col("a.vec_id").alias("u"),
-            F.col("b.vec_id").alias("v"),
-            round4(
-                dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.norm") * F.col("b.norm"))
-            ).alias("c"),
-        )
-        w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
-        pairs = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= _KNN_TOPK)
-            .select("u", "v", "c")
-        )
-    else:
-        pairs = _exact_pairs_blocked(spark, emb)
-    pairs = pairs.persist()
-    _COSINE_PAIRS_CACHE[key] = pairs
-    return pairs
-
-
-def _exact_pairs_blocked(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """Exact per-u top-K cosine pairs via blocked Arrow-batched numpy —
-    the brute-force-broadcast shape (FAISS/cuML style): the build side
-    (n·d floats, ~1 MB at sf0.1) is broadcast, each Arrow batch of query
-    vectors computes an m×n similarity block, and only the per-u top-K
-    rows ever leave Python. Replaces the round-1..5 theta self-join whose
-    per-pair HOF-lambda dot products made the one-time build the
-    registry's slowest non-digest stage (41 s at sf0.1 → ~2 s here).
-
-    BIT-EXACT with the DuckDB oracle's sequential left-fold: the block is
-    accumulated one dimension at a time (``sims += outer(Q[:,i], M[:,i])``
-    in float64), which performs the identical IEEE addition sequence as
-    ``llm.dot``'s ``aggregate`` fold and DuckDB's ``list_reduce`` — no
-    BLAS matmul, whose pairwise summation would drift a ulp and flip
-    ``round4`` at grid boundaries (verified: 0 mismatches on raw dots and
-    rounded cosines vs the JVM fold).
-
-    Degenerate-input semantics replicated from the theta join it
-    replaces: NULL/ragged embeddings score NULL against everything (but
-    still emit pairs), NULL vec_ids produce no pairs at all (NULL ≠ NULL),
-    self-pairs are excluded by id equality (the dup fixture's repeated id
-    ⇒ zero pairs), and ordering is (c DESC [NaN greatest, NULLs last],
-    v ASC) — Spark's exact window order.
-
-    KNOWN DIVERGENCES from the legacy theta join, both unreachable on the
-    project fixtures (ADVICE r6):
-    - Arrow conflates a NULL element with a float NaN on the query side,
-      so a query embedding containing a GENUINE NaN is classified invalid
-      here (NULL c, ranked last) where the theta join / DuckDB fold would
-      propagate a NaN cosine ranked FIRST under c DESC. Build-side NaN
-      embeddings still propagate NaN. FIXTURES.md's generators emit no
-      NaN embeddings (NULL elements and ragged lengths are the degenerate
-      shapes they probe), so the asymmetry is latent; pre-filtering NaN
-      at the loader seam was rejected because it would also rewrite the
-      legacy/oracle semantics this kernel is pinned against.
-    - Validity is pinned to the single modal dimension d: two ragged
-      vectors sharing a non-modal length get NULL c here but a real
-      cosine from the legacy join. FIXTURES.md fixes dim=64 for every
-      embedding fixture, so mixed-dimension corpora never arise; the
-      tie-break when two lengths share the modal count is deterministic
-      (max count, then smallest d).
-
-    Scale ladder (VERDICT r9 #5 — no unconditional driver collect): the
-    kernel first MEASURES the build side with a 1-row aggregate. Up to
-    64 MiB it is a single broadcast; up to the driver budget
-    (``SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB``, default 1 GiB) it is
-    auto-sharded into ≤64 MiB contiguous broadcast blocks — the
-    identical kernel runs once per block and the pooled re-window below
-    takes the global top-K of the per-block top-Ks, bit-exact for any S
-    (pinned under forced 4-block auto-sharding in
-    tests/test_knn_family.py): per-pair folds don't depend on block
-    membership, and a globally-ranked row always survives its own
-    block's top-K. Past the budget the kernel REFUSES with
-    ``UnsupportedError`` naming the scale path — exact kNN there is
-    O(n²·d) compute before it is a memory problem, and the answer is
-    ``SPARK_GRAFT_KNN_CANDIDATES=ann`` (sub-quadratic banded LSH,
-    recall measured and floor-pinned at sf1), not a bigger driver."""
-    import numpy as np
-    import pandas as pd
-
-    # Measure the build side BEFORE materializing it (one 1-row
-    # aggregate job): the collect below is sanctioned only because this
-    # guard proves it bounded. Estimate = float64 matrix + id overhead.
-    est = emb.agg(
-        F.sum(
-            F.greatest(F.coalesce(F.size("embedding"), F.lit(0)), F.lit(0))
-        ).alias("elems"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    est_bytes = int(est["elems"] or 0) * 8 + int(est["n"] or 0) * 16
-    budget = _knn_exact_build_budget_bytes()
-    if est_bytes > budget:
-        from datapipelines_python_spark.pipeline.common import UnsupportedError
-
-        raise UnsupportedError(
-            f"exact-kNN build side ≈{est_bytes >> 20} MiB exceeds the "
-            f"{budget >> 20} MiB driver budget "
-            "(SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB). Exact kNN at this "
-            "corpus size is O(n²·d) compute before it is a memory "
-            "problem — set SPARK_GRAFT_KNN_CANDIDATES=ann for the "
-            "sub-quadratic banded-LSH generator (recall measured and "
-            "floor-pinned at sf1; see SCALE.md §§22-23)."
-        )
-
-    # broadcast-build collect: materializes the build side (n·d floats,
-    # ~1 MB at sf0.1) to broadcast it — the same driver hop F.broadcast
-    # performs internally; not a driver-side result loop. CONDITIONAL on
-    # the budget guard above (VERDICT r9 #5): the driver hop is provably
-    # ≤ SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB.
-    # tests/test_plan_quality.py allowlists exactly this marked line.
-    build = emb.collect()  # broadcast-build collect
-    d_counts: dict[int, int] = {}
-    for r in build:
-        e = r["embedding"]
-        if e is not None and all(x is not None for x in e):
-            d_counts[len(e)] = d_counts.get(len(e), 0) + 1
-    # Deterministic tie-break (ADVICE r6): max count, then SMALLEST d —
-    # a bare max() over the dict would break ties by collect() insertion
-    # order, which can vary with partition layout across environments.
-    d = (
-        max(d_counts, key=lambda k: (d_counts[k], -k)) if d_counts else 0
-    )
-
-    valid_ids, valid_rows = [], []
-    invalid_ids = []
-    for r in build:
-        vid, e = r["vec_id"], r["embedding"]
-        if vid is None:
-            continue  # NULL ≠ NULL: a NULL id joins to nothing
-        if e is not None and len(e) == d and all(x is not None for x in e):
-            valid_ids.append(vid)
-            valid_rows.append(e)
-        else:
-            invalid_ids.append(vid)
-    M = (
-        np.array(valid_rows, dtype=np.float32).astype(np.float64)
-        if valid_rows
-        else np.zeros((0, d or 1))
-    )
-    nrm = np.zeros(len(M))
-    for i in range(M.shape[1] if len(M) else 0):
-        nrm += M[:, i] * M[:, i]
-    nrm = np.sqrt(nrm)
-    v_ids = np.array(valid_ids, dtype=np.int64) if valid_ids else np.zeros(0, np.int64)
-    inv_sorted = sorted(invalid_ids)
-    K = _KNN_TOPK
-
-    def shard_kernel(M_s, nrm_s, vids_s, inv_s):
-        """Per-block kernel factory: identical math for every shard; the
-        invalid-id NULL-c tail and the invalid-query fallback rows are
-        emitted by the shard that owns those ids, so every candidate
-        (u, v) appears in exactly one shard's output."""
-        bc = spark.sparkContext.broadcast((M_s, nrm_s, vids_s, inv_s, d))
-
-        def topk_pairs(batches):
-            M, nrm, v_ids, inv_sorted, d = bc.value
-            n_valid = len(v_ids)
-            for pdf in batches:
-                out_u, out_v, out_c = [], [], []
-                q_rows: list[tuple[int, "np.ndarray"]] = []
-                null_qids: list[int] = []
-                for vid, e in zip(pdf["vec_id"], pdf["embedding"]):
-                    if vid is None or pd.isna(vid):
-                        continue  # NULL id joins to nothing (NULL ≠ NULL)
-                    vid = int(vid)
-                    q_ok = (
-                        e is not None
-                        and len(e) == d
-                        and not np.isnan(np.array(e, dtype=np.float64)).any()
-                        if e is not None and hasattr(e, "__len__")
-                        else False
-                    )
-                    if q_ok and n_valid:
-                        q_rows.append(
-                            (vid, np.array(e, dtype=np.float32).astype(np.float64))
-                        )
-                    else:
-                        null_qids.append(vid)
-                if q_rows:
-                    Q = np.stack([q for _, q in q_rows])
-                    qids = [vid for vid, _ in q_rows]
-                    m = len(Q)
-                    sims = np.zeros((m, n_valid))
-                    for i in range(d):  # sequential fold: oracle-bit-exact
-                        sims += np.outer(Q[:, i], M[:, i])
-                    qn = np.zeros(m)
-                    for i in range(d):
-                        qn += Q[:, i] * Q[:, i]
-                    C = (
-                        np.floor(
-                            sims / np.outer(np.sqrt(qn), nrm) * 10000.0 + 0.5
-                        )
-                        / 10000.0
-                    )
-                    for r, vid in enumerate(qids):
-                        mask = v_ids != vid  # exclude self BY ID (dup fixture)
-                        cm, vm = C[r][mask], v_ids[mask]
-                        # Spark order: c DESC (NaN greatest, NULLs last), v ASC
-                        s_key = np.where(np.isnan(cm), -np.inf, -cm)
-                        order = np.lexsort((vm, s_key))[:K]
-                        out_u.extend([vid] * len(order))
-                        out_v.extend(int(vm[j]) for j in order)
-                        out_c.extend(float(cm[j]) for j in order)
-                        taken = len(order)
-                        # NULL-c tail vs invalid build rows (rank last, v ASC;
-                        # only invalid ids remain — every valid v is scored)
-                        for v in inv_sorted:
-                            if taken >= K:
-                                break
-                            if v != vid:
-                                out_u.append(vid)
-                                out_v.append(v)
-                                out_c.append(None)
-                                taken += 1
-                for vid in null_qids:
-                    # invalid query: NULL c against EVERY other id; all-NULL
-                    # c ties break by v ASC across valid+invalid merged
-                    vm = sorted(
-                        [int(x) for x in v_ids if int(x) != vid]
-                        + [v for v in inv_sorted if v != vid]
-                    )
-                    for v in vm[:K]:
-                        out_u.append(vid)
-                        out_v.append(v)
-                        out_c.append(None)
-                yield pd.DataFrame(
-                    {
-                        "u": pd.Series(out_u, dtype="int64"),
-                        "v": pd.Series(out_v, dtype="int64"),
-                        "c": pd.Series(out_c, dtype="object"),
-                    }
-                )
-
-        return topk_pairs
-
-    # Build-side sharding (VERDICT r6 #4): S contiguous row blocks, one
-    # full-query-side kernel pass per block, union of per-block top-Ks.
-    # S=1 is the single-broadcast fast path; S>1 is the executable
-    # 100 TB shape for a build side too large for one broadcast: S is
-    # raised so each broadcast block stays ≤ _KNN_SHARD_BYTES (bit-exact
-    # for any S, pinned under forced 4-block sharding). The invalid-id
-    # tail rides with shard 0. The query side runs in the ``vector``
-    # class's task count of its rows.
-    S = min(max(-(-est_bytes // _KNN_SHARD_BYTES), 1), max(len(v_ids), 1))
-    par = task_count(spark, int(est["n"] or 0), "vector")
-    block_idx = np.array_split(np.arange(len(v_ids)), S)
-    per_row = None
-    for s_i, idx in enumerate(block_idx):
-        fn = shard_kernel(
-            M[idx] if len(v_ids) else M,
-            nrm[idx],
-            v_ids[idx],
-            inv_sorted if s_i == 0 else [],
-        )
-        block_df = emb.repartition(par).mapInPandas(
-            fn, "u long, v long, c double"
-        )
-        per_row = block_df if per_row is None else per_row.unionByName(block_df)
-    # Pooled re-window over the K·n output: a no-op for unique vec_ids
-    # (already ≤K per u in window order), but under duplicate ids it pools
-    # the duplicates' candidate streams exactly like the legacy theta-join
-    # window did — identical output on every fixture degenerate shape
-    # (NaN-element and mixed-dimension corpora diverge; see docstring).
-    w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
-    return (
-        per_row.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_TOPK)
-        .select("u", "v", "c")
-    )
-
-
-def _ann_candidates(nv: DataFrame) -> DataFrame:
-    """Banded sign-LSH candidate pairs: vectors sharing any band's sign
-    bucket. One explode (L rows per vector), one equi-self-join on
-    (band, bucket), one distinct — Σ bucket-occupancy² work, never a
-    cartesian. Aliased 'a'/'b' to be plug-compatible with the exact join.
-
-    ADAPTIVE bucket width (round 8, from the full-registry sf1 profile):
-    with the bucket count fixed at 2^6 per band, Σ bucket-occupancy² is
-    quadratic in n — the supposedly sub-quadratic twins measured 28×
-    wall per 10× rows at sf1 (llm_hard_negative_mining_ann 3.5 → 97 s).
-    Each band's 6 base sign bits are therefore extended by
-    E = bit_length((n-1) div 2000) comparison bits (== ceil(log2(n/2000))
-    for n > 2000, 0 below, but computed with INTEGER arithmetic on both
-    engines so no float-log2 ulp seam at n = 2000·2^k) — bit j of band i is
-    sign(embedding[p] − embedding[q]) at the deterministic dim pair
-    p = (i·6 + j·11) mod 64, q = (p + 31) mod 64 (a rank hyperplane
-    (e_p − e_q): deterministic, so the DuckDB oracle replays it
-    bit-for-bit; 11 and 31 are coprime to 64 so pairs never repeat
-    within a band). Expected occupancy stays ≤ n/2^(6+E) ≤ 31, making
-    candidate work ≤ 31·n per band — linear with a ≤2× sawtooth. At
-    n ≤ 2000 (every sf ≤ 0.1 fixture) E = 0 and the bucketing is
-    bit-identical to the pre-r8 scheme, so locked walls, recall pins and
-    oracle values below sf1 are unchanged.
-
-    MARGIN-RANKED MULTI-PROBE (round 9, VERDICT r8 #3): the extra bits
-    keep work linear but cost recall — measured recall@5 vs exact numpy
-    ground truth fell 0.369 (sf0.1, E=0) → 0.112 (sf1, E=4) with
-    home-bucket probing only. Each vector therefore ALSO probes, per
-    band, the E buckets obtained by flipping the E smallest-|margin|
-    bits (margin = |e[p]| for a sign bit, |e[p]−e[q]| for a rank bit —
-    the hyperplanes the vector is closest to, i.e. the bits most likely
-    to disagree with a true neighbor; ties break on bit position). That
-    is the classic multi-probe LSH trade: recall@5 at sf1 measured back
-    to 0.382 (scripts/recall_sf1.py) for (1+E)× candidate work — still
-    linear with a log factor, vs the fixed-bit scheme's quadratic blowup
-    or the ×2^E table count vanilla LSH would need. Probing is
-    asymmetric (probe side × home side) and then symmetrized, which at
-    E = 0 degenerates to exactly the old home×home self-join — so every
-    sub-sf1 value, wall, and oracle pin is untouched; both engines
-    compute the identical probe set (verified entry-for-entry at sf0.1
-    and sf1), so oracles replay bit-for-bit."""
-    # constant-key broadcast EQUI join (not crossJoin): a 1-row cross
-    # renders as BroadcastNestedLoopJoin, which the kNN plan gate
-    # (tests/test_knn_family.py) rightly forbids anywhere near the
-    # candidate path. The `_k` keys must be COLUMN-derived (always 0,
-    # but not literals): literal keys constant-fold to a conditionless
-    # join and Catalyst plans the BNLJ anyway.
-    # least(_n, 0) is always 0 (counts are non-negative) but the
-    # optimizer cannot prove that, so the key survives constant folding
-    # where `_n * 0` did not (non-null × 0 folds to literal 0, which
-    # turns the equi-condition into a pushed filter + BNLJ again).
-    n1 = nv.agg(F.count(F.lit(1)).alias("_n")).select(
-        F.least(F.col("_n"), F.lit(0)).cast("int").alias("_k"),
-        F.expr(
-            "CASE WHEN (greatest(_n, 1) - 1) div 2000 <= 0 THEN 0 "
-            "ELSE length(bin((greatest(_n, 1) - 1) div 2000)) END"
-        ).alias("_e"),
-    )
-    home_expr = (
-        "(CAST(aggregate(slice(embedding, i * {B} + 1, {B}), 0, "
-        "(acc, x) -> acc * 2 + IF(x >= CAST(0.0 AS FLOAT), 1, 0)) AS BIGINT)"
-        " * shiftleft(CAST(1 AS BIGINT), _e) + IF(_e = 0, CAST(0 AS BIGINT), "
-        "aggregate(sequence(0, _e - 1), CAST(0 AS BIGINT), (acc, j) -> "
-        "acc * 2 + IF("
-        "try_element_at(embedding, CAST((i * {B} + j * 11) % 64 AS INT) + 1) > "
-        "try_element_at(embedding, CAST((i * {B} + j * 11 + 31) % 64 AS INT) + 1), "
-        "CAST(1 AS BIGINT), CAST(0 AS BIGINT)))))"
-    ).format(B=_ANN_BITS)
-    bucket_expr = (
-        f"transform(sequence(0, {_ANN_BANDS} - 1), i -> {home_expr})"
-    )
-    # per-band (margin, bit-position) candidates: bit k<B is the sign bit
-    # of dim i·B+k (bucket position _e+B-1-k), else rank bit k-B (bucket
-    # position _e-1-(k-B)); margins are the vector's distance to each
-    # bit's hyperplane, in double on both engines
-    cands_expr = (
-        "transform(sequence(0, {B} - 1 + _e), k -> named_struct("
-        "'m', IF(k < {B}, "
-        "abs(CAST(try_element_at(embedding, i * {B} + k + 1) AS DOUBLE)), "
-        "abs(CAST(try_element_at(embedding, CAST((i * {B} + (k - {B}) * 11) % 64 AS INT) + 1) AS DOUBLE) "
-        "- CAST(try_element_at(embedding, CAST((i * {B} + (k - {B}) * 11 + 31) % 64 AS INT) + 1) AS DOUBLE))), "
-        "'p', IF(k < {B}, _e + {B} - 1 - k, _e - 1 - (k - {B}))))"
-    ).format(B=_ANN_BITS)
-    probes_expr = (
-        "concat(array(CAST(0 AS BIGINT)), "
-        f"transform(slice(array_sort({cands_expr}), 1, _e), "
-        "s -> shiftleft(CAST(1 AS BIGINT), s.p)))"
-    )
-    probe_entries_expr = (
-        f"flatten(transform(sequence(0, {_ANN_BANDS} - 1), i -> "
-        f"transform({probes_expr}, m -> "
-        f"named_struct('band', i, 'bucket', {home_expr} ^ m))))"
-    )
-    keyed = nv.withColumn(
-        "_k", F.coalesce(F.col("vec_id") * F.lit(0), F.lit(0)).cast("int")
-    ).join(F.broadcast(n1), "_k")
-    banded = keyed.select(
-        "vec_id", F.posexplode(F.expr(bucket_expr)).alias("band", "bucket")
-    )
-    probed = keyed.select(
-        "vec_id", F.explode(F.expr(probe_entries_expr)).alias("e")
-    ).select("vec_id", F.col("e.band").alias("band"), F.col("e.bucket").alias("bucket"))
-    hits = (
-        probed.alias("x")
-        .join(
-            banded.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.vec_id") != F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("cu"), F.col("y.vec_id").alias("cv"))
-    )
-    # symmetrize: the old home×home join emitted both directions of every
-    # pair, and the per-u windows downstream depend on that. Measured at
-    # sf1 (32.7M candidate pairs): union(hits, hits.swapped) beats a
-    # single-pass explode-both-directions (62 vs 82 s end-to-end) —
-    # Spark's ReuseExchange serves the second branch from the first
-    # join's shuffles and the branches run concurrently, while the
-    # Generate doubles 33M rows through one serial operator
-    cand_ids = hits.union(
-        hits.select(F.col("cv").alias("cu"), F.col("cu").alias("cv"))
-    ).distinct()
-    return (
-        cand_ids.join(nv.alias("a"), F.col("cu") == F.col("a.vec_id"))
-        .join(nv.alias("b"), F.col("cv") == F.col("b.vec_id"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Registered ANN-candidate twins (VERDICT r2 "Next round" #2): the banded
-# sign-LSH candidate path above used to be reachable only through the
-# SPARK_GRAFT_KNN_CANDIDATES=ann env override, so the 100 TB-shaped plan
-# never produced a CORRECTNESS row. These ops register it directly, with
-# DuckDB oracles that replay the band/bucket assignment bit-for-bit, and
-# sit inside the driver's first-50 slice (registry.DRIVER_SLICE).
-# tests/test_knn_family.py gates the plans: no CartesianProduct / BNLJ —
-# candidate cost is Σ bucket-occupancy², never n².
-# --------------------------------------------------------------------------
-
-# DuckDB replay of _ann_candidates' banding: band b in 0..7, bucket =
-# big-endian fold of the 6 sign bits of embedding[b*6+1 .. b*6+6]
-# (1-based), exactly matching the Spark aggregate's acc*2 + (x >= 0) —
-# extended since round 8 by the adaptive comparison bits (see
-# _ann_candidates' docstring): base << _e plus the big-endian fold of
-# sign(embedding[p] − embedding[q]) over the identical dim-pair schedule.
-def _sql_ann_home(v: str) -> str:
-    """DuckDB home bucket of band ``v`` — bit-twin of ``home_expr``."""
-    return (
-        "(("
-        + " + ".join(
-            f"CASE WHEN embedding[{v} * {_ANN_BITS} + {k}] >= 0 "
-            f"THEN CAST({1 << (_ANN_BITS - k)} AS BIGINT) ELSE 0 END"
-            for k in range(1, _ANN_BITS + 1)
-        )
-        + ") * (CAST(1 AS BIGINT) << _e) + COALESCE(LIST_SUM(["
-        f"CASE WHEN embedding[(({v} * {_ANN_BITS} + j * 11) % 64) + 1] > "
-        f"embedding[(({v} * {_ANN_BITS} + j * 11 + 31) % 64) + 1] "
-        "THEN (CAST(1 AS BIGINT) << (_e - 1 - j)) ELSE 0 END "
-        "FOR j IN RANGE(0, _e)]), 0))"
-    )
-
-
-_SQL_ANN_BUCKET = _sql_ann_home("band")
-
-# per-band margin-ranked probe entries — bit-twin of probe_entries_expr
-# in _ann_candidates (same margins, same positions, same tie-break)
-_SQL_ANN_CANDS = (
-    "[{{'m': CASE WHEN k < {B} THEN ABS(CAST(embedding[i*{B} + k + 1] AS DOUBLE)) "
-    "ELSE ABS(CAST(embedding[((i*{B} + (k-{B})*11) % 64) + 1] AS DOUBLE) "
-    "- CAST(embedding[((i*{B} + (k-{B})*11 + 31) % 64) + 1] AS DOUBLE)) END, "
-    "'p': CASE WHEN k < {B} THEN _e + {B} - 1 - k ELSE _e - 1 - (k - {B}) END}} "
-    "FOR k IN RANGE(0, {B} + _e)]"
-).format(B=_ANN_BITS)
-_SQL_ANN_PROBE_ENTRIES = (
-    "flatten([[{'band': i, 'bucket': xor(" + _sql_ann_home("i") + ", m)} "
-    "FOR m IN list_concat([CAST(0 AS BIGINT)], "
-    "[CAST(1 AS BIGINT) << s['p'] FOR s IN "
-    f"list_sort({_SQL_ANN_CANDS})[: _e]])] "
-    f"FOR i IN RANGE(0, {_ANN_BANDS})])"
-)
-
-_SQL_ANN_SCORED = f"""
-        ann_nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT({sql_dot('embedding', 'embedding')}) AS norm
-            FROM embeddings
-        ),
-        ann_e AS MATERIALIZED (
-            SELECT CASE WHEN (GREATEST(COUNT(*), 1) - 1) // 2000 <= 0
-                   THEN 0 ELSE LENGTH(BIN(
-                        (GREATEST(COUNT(*), 1) - 1) // 2000)) END AS _e
-            FROM embeddings
-        ),
-        ann_banded AS MATERIALIZED (
-            -- embedding IS NOT NULL: the sign-bit CASEs would fall to
-            -- ELSE 0 and dump every NULL vector into bucket 0 (an n²
-            -- candidate blob); Spark's NULL bucket simply never joins
-            SELECT vec_id, band, {_SQL_ANN_BUCKET} AS bucket
-            FROM embeddings,
-                 (SELECT UNNEST(RANGE(0, {_ANN_BANDS})) AS band),
-                 ann_e
-            WHERE embedding IS NOT NULL
-        ),
-        ann_probe AS MATERIALIZED (
-            -- home + E margin-ranked single-bit-flip probes per band
-            -- (multi-probe LSH; degenerates to home-only at _e = 0)
-            SELECT vec_id, e['band'] AS band, e['bucket'] AS bucket
-            FROM (SELECT vec_id, UNNEST({_SQL_ANN_PROBE_ENTRIES}) AS e
-                  FROM embeddings, ann_e
-                  WHERE embedding IS NOT NULL) t
-        ),
-        ann_cand AS MATERIALIZED (
-            SELECT DISTINCT cu, cv FROM (
-                SELECT x.vec_id AS cu, y.vec_id AS cv
-                FROM ann_probe x JOIN ann_banded y
-                  ON x.band = y.band AND x.bucket = y.bucket
-                 AND x.vec_id <> y.vec_id
-                UNION ALL
-                SELECT y.vec_id AS cu, x.vec_id AS cv
-                FROM ann_probe x JOIN ann_banded y
-                  ON x.band = y.band AND x.bucket = y.bucket
-                 AND x.vec_id <> y.vec_id
-            ) u
-        ),
-        ann_scored AS MATERIALIZED (
-            SELECT t.cu AS u, t.cv AS v,
-                   {sql_round4(sql_dot('a.embedding', 'b.embedding')
-                               + ' / (a.norm * b.norm)')} AS c
-            FROM ann_cand t
-            JOIN ann_nv a ON t.cu = a.vec_id
-            JOIN ann_nv b ON t.cv = b.vec_id
-        )
-"""
-
-
-def _ann_scored_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Cosine-scored banded sign-LSH candidate pairs (u, v, round4 c) —
-    the registered production candidate stream: one home explode
-    (8 rows/vec) joined by one probe explode (8·(1+E) rows/vec — home
-    plus E margin-ranked bit flips per band, E = 0 below n = 2000), one
-    (band, bucket) equi-join, one symmetrized distinct, exact rescoring
-    of candidates only. Work is (1+E)·Σ bucket-occupancy² per band —
-    log-linear — never n²."""
-    from datapipelines_python_spark.operators.llm import dot
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    nv = emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot("embedding", "embedding")).alias("norm"),
-    )
-    return _ann_candidates(nv).select(
-        F.col("a.vec_id").alias("u"),
-        F.col("b.vec_id").alias("v"),
-        round4(
-            dot(F.col("a.embedding"), F.col("b.embedding"))
-            / (F.col("a.norm") * F.col("b.norm"))
-        ).alias("c"),
-    )
-
-
-_ANN_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _ann_edge_table_df(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-u top-5 ANN edge table (u, v, c, rank), persisted once per
-    (session, sf) — the scale-path twin of ``_mutual_5nn``'s exact input."""
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _ANN_EDGE_CACHE.get(key)
-    if cached is not None:
-        if not cached.storageLevel.useMemory:  # re-pin after clearCache()
-            cached.persist()
-        return cached
-    w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
-    edges = (
-        _ann_scored_pairs(spark, sf)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("u", "v", "c", F.col("rank").cast("int").alias("rank"))
-        .persist()
-    )
-    _ANN_EDGE_CACHE[key] = edges
-    return edges
-
-
 @query(
     "graph_ann_edge_table",
     oracle=f"""
-        WITH {_SQL_ANN_SCORED}
-        SELECT u, v, c AS cosine, CAST(rn AS INT) AS rank
-        FROM (
-            SELECT u, v, c,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY u ORDER BY c DESC, v) AS rn
-            FROM ann_scored
-        ) r WHERE rn <= 5
+        WITH {ANN.sql}
+        SELECT u, v, c AS cosine, rank FROM topk
     """,
     tags=("workload", "graph", "similarity", "ann"),
 )
@@ -5657,1064 +4846,19 @@ def graph_ann_edge_table(spark: SparkSession, sf: str) -> DataFrame:
     """The 100 TB kNN candidate path, registered and oracle-checked: banded
     sign-LSH (8 bands x 6 sign bits) candidate generation -> exact cosine
     on candidates only -> per-u top-5. This is the edge table every
-    kNN-graph consumer rides at scale (the exact ``_cosine_pairs`` default
-    is the fixture-scale formulation; see its docstring for the recall
-    trade on these isotropic fixtures). Candidate compute is
-    Σ bucket-occupancy² — at 1000 executors the (band, bucket) equi-join
-    shuffles each vector 8 times and never builds the n² product."""
-    return _ann_edge_table_df(spark, sf).select(
+    ``*_ann`` consumer rides at scale (the exact ``_cosine_pairs`` is the
+    fixture-scale formulation; see its docstring for the recall trade on
+    these isotropic fixtures). Candidate compute is Σ bucket-occupancy² —
+    at 1000 executors the (band, bucket) equi-join shuffles each vector 8
+    times and never builds the n² product."""
+    return ANN.top5(spark, sf).select(
         "u", "v", F.col("c").alias("cosine"), "rank"
     )
 
 
-@query(
-    "graph_triangle_count_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        topk AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT u, v,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY u ORDER BY c DESC, v) AS rn
-                FROM ann_scored
-            ) r WHERE rn <= 5
-        ),
-        mutual AS MATERIALIZED (
-            SELECT x.u, x.v
-            FROM topk x JOIN topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        )
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ann_nv) AS n_nodes,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM mutual) AS n_edges,
-               (SELECT CAST(COUNT(*) AS BIGINT)
-                FROM mutual e1
-                JOIN mutual e2 ON e1.v = e2.u
-                JOIN mutual e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles
-    """,
-    tags=("workload", "graph", "similarity", "ann"),
-)
-def graph_triangle_count_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_triangle_count`` with its edge list built from the banded
-    sign-LSH candidate path instead of the exact n² pass — the plan shape
-    that actually runs at 100 TB. Same oriented three-way self-join over
-    mutual-5NN edges; only the candidate generator differs, and the oracle
-    replays the banding bit-for-bit so the ANN path itself is what gets
-    hash-checked."""
-    edges = _ann_edge_table_df(spark, sf).select("u", "v")
-    mutual = (
-        edges.alias("x")
-        .join(
-            edges.alias("y"),
-            (F.col("x.u") == F.col("y.v")) & (F.col("x.v") == F.col("y.u")),
-        )
-        .filter(F.col("x.u") < F.col("x.v"))
-        .select(F.col("x.u").alias("u"), F.col("x.v").alias("v"))
-    )
-    nv = load_table(spark, sf, "embeddings").select("vec_id")
-    n_nodes = nv.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    n_edges = mutual.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-    tri = (
-        mutual.alias("e1")
-        .join(mutual.alias("e2"), F.col("e1.v") == F.col("e2.u"))
-        .join(
-            mutual.alias("e3"),
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-    )
-    return n_nodes.crossJoin(n_edges).crossJoin(tri)
-
-
-@query(
-    "llm_hard_negative_mining_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        lab AS (SELECT vec_id, label FROM embeddings),
-        p AS (
-            SELECT s.u AS anchor_id, la.label AS anchor_label,
-                   s.v AS negative_id, s.c AS cos_sim
-            FROM ann_scored s
-            JOIN lab la ON s.u = la.vec_id
-            JOIN lab lb ON s.v = lb.vec_id
-            WHERE la.label <> lb.label
-        )
-        SELECT anchor_id, CAST(anchor_label AS INT) AS anchor_label,
-               negative_id, cos_sim, CAST(rn AS INT) AS neg_rank
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
-                                         ORDER BY cos_sim DESC,
-                                                  negative_id) AS rn
-            FROM p
-        ) r WHERE rn <= 3
-    """,
-    tags=("llm", "similarity", "training", "ann"),
-)
-def llm_hard_negative_mining_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``llm_hard_negative_mining`` on the banded sign-LSH candidate
-    stream: per anchor, the 3 most-similar DIFFERENT-label vectors among
-    its LSH-bucket candidates. This is the between-epochs mining pass as
-    it runs at 100 TB — candidates from the bucket join (never n²), the
-    label-mismatch filter and rank-and-take-3 unchanged. Label lookups
-    broadcast (the label table is two thin columns)."""
-    lab = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    p = (
-        _ann_scored_pairs(spark, sf)
-        .join(
-            F.broadcast(
-                lab.select(F.col("vec_id").alias("u"), F.col("label").alias("la"))
-            ),
-            "u",
-        )
-        .join(
-            F.broadcast(
-                lab.select(F.col("vec_id").alias("v"), F.col("label").alias("lb"))
-            ),
-            "v",
-        )
-        .filter(F.col("la") != F.col("lb"))
-        .select(
-            F.col("u").alias("anchor_id"),
-            F.col("la").cast("int").alias("anchor_label"),
-            F.col("v").alias("negative_id"),
-            F.col("c").alias("cos_sim"),
-        )
-    )
-    rn = F.row_number().over(
-        W.partitionBy("anchor_id").orderBy(F.desc("cos_sim"), F.asc("negative_id"))
-    )
-    return (
-        p.withColumn("neg_rank", rn)
-        .filter(F.col("neg_rank") <= 3)
-        .withColumn("neg_rank", F.col("neg_rank").cast("int"))
-    )
-
-
-# Shared DuckDB fragments for the ANN-twin family (VERDICT r4 #3): directed
-# per-u top-5 over the banded candidates, and the mutual (undirected) edge
-# list derived from it. Appended after _SQL_ANN_SCORED in each twin's WITH.
-_SQL_ANN_T5 = """
-        ann_topk AS MATERIALIZED (
-            SELECT u, v, c FROM (
-                SELECT u, v, c,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY u ORDER BY c DESC, v) AS rn
-                FROM ann_scored
-            ) r WHERE rn <= 5
-        )
-"""
-
-_SQL_ANN_MUTUAL = """
-        ann_mutual AS MATERIALIZED (
-            SELECT x.u, x.v
-            FROM ann_topk x JOIN ann_topk y ON x.u = y.v AND x.v = y.u
-            WHERE x.u < x.v
-        )
-"""
-
-
-def _ann_mutual_df(spark: SparkSession, sf: str) -> DataFrame:
-    """Undirected (u < v) mutual edges of the ANN top-5 graph — derived
-    from the persisted ``_ann_edge_table_df``, so the bucket-join candidate
-    pass runs once per (session, sf) and this is a 5n-row self-join."""
-    topk = _ann_edge_table_df(spark, sf).select("u", "v")
-    return (
-        topk.alias("x")
-        .join(
-            topk.alias("y"),
-            (F.col("x.u") == F.col("y.v")) & (F.col("x.v") == F.col("y.u")),
-        )
-        .filter(F.col("x.u") < F.col("x.v"))
-        .select(F.col("x.u").alias("u"), F.col("x.v").alias("v"))
-    )
-
-
-@query(
-    "ml_knn_classifier_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        lab AS (SELECT vec_id, label FROM embeddings),
-        knn AS MATERIALIZED (
-            SELECT t.u AS q, la.label AS label_actual, lb.label AS label_n
-            FROM ann_topk t
-            JOIN lab la ON t.u = la.vec_id
-            JOIN lab lb ON t.v = lb.vec_id
-        ),
-        votes AS (
-            SELECT q, label_actual, label_n,
-                   CAST(COUNT(*) AS BIGINT) AS n_votes
-            FROM knn GROUP BY q, label_actual, label_n
-        ),
-        pred AS (
-            SELECT q, label_actual, label_n AS label_pred FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY q
-                                             ORDER BY n_votes DESC,
-                                                      label_n) AS rn
-                FROM votes
-            ) r WHERE rn = 1
-        )
-        SELECT CAST(label_actual AS INT) AS label_actual,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN label_pred = label_actual
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-               FLOOR(SUM(CASE WHEN label_pred = label_actual
-                              THEN 1 ELSE 0 END)
-                     / CAST(COUNT(*) AS DOUBLE) * 10000.0 + 0.5) / 10000.0
-                   AS accuracy
-        FROM pred GROUP BY label_actual
-    """,
-    tags=("ml", "similarity", "eval", "ann"),
-)
-def ml_knn_classifier_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``ml_knn_classifier`` with neighbor lists from the banded sign-LSH
-    candidate path — the classification pass as it runs at 100 TB: the
-    vote and score stages consume the persisted ANN top-5 edge table
-    unchanged, so classification cost is the Σ bucket² candidate cost.
-    Anchors whose buckets yield no candidates simply have no vote rows on
-    either engine (the honest ANN behaviour; recall trade documented at
-    ``_cosine_pairs``)."""
-    lab = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    knn = (
-        _ann_edge_table_df(spark, sf)
-        .select("u", "v")
-        .join(
-            F.broadcast(
-                lab.select(F.col("vec_id").alias("u"),
-                           F.col("label").alias("label_actual"))
-            ),
-            "u",
-        )
-        .join(
-            F.broadcast(
-                lab.select(F.col("vec_id").alias("v"),
-                           F.col("label").alias("label_n"))
-            ),
-            "v",
-        )
-        .select(F.col("u").alias("q"), "label_actual", "label_n")
-    )
-    votes = knn.groupBy("q", "label_actual", "label_n").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_votes")
-    )
-    pred = (
-        votes.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("q").orderBy(F.desc("n_votes"), F.asc("label_n"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("q", "label_actual", F.col("label_n").alias("label_pred"))
-    )
-    correct = F.when(F.col("label_pred") == F.col("label_actual"), 1).otherwise(0)
-    return pred.groupBy(
-        F.col("label_actual").cast("int").alias("label_actual")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(correct).cast("bigint").alias("n_correct"),
-        (
-            F.floor(
-                F.sum(correct) / F.count(F.lit(1)).cast("double") * 10000.0 + 0.5
-            )
-            / 10000.0
-        ).alias("accuracy"),
-    )
-
-
-@query(
-    "ml_lof_outliers_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        t5 AS (SELECT u, v, 1.0 - c AS d FROM ann_topk),
-        kd AS (SELECT u, MAX(d) AS kdist FROM t5 GROUP BY u),
-        reach AS (
-            SELECT t5.u, t5.v, GREATEST(kd.kdist, t5.d) AS rd
-            FROM t5 JOIN kd ON kd.u = t5.v
-        ),
-        lrd AS (
-            SELECT u, 1.0 / (SUM(rd) / 5.0) AS lrd FROM reach GROUP BY u
-        ),
-        lof AS (
-            SELECT t5.u,
-                   (SUM(ln.lrd) / 5.0) / lu.lrd AS lof
-            FROM t5
-            JOIN lrd ln ON ln.u = t5.v
-            JOIN lrd lu ON lu.u = t5.u
-            GROUP BY t5.u, lu.lrd
-        )
-        SELECT lof.u AS vec_id,
-               {sql_round4('kd.kdist')} AS kdist,
-               {sql_round4('lof.lof')} AS lof,
-               lof.lof > 1.5 AS is_outlier
-        FROM lof JOIN kd ON kd.u = lof.u
-    """,
-    tags=("ml", "outlier", "density", "ann"),
-)
-def ml_lof_outliers_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``ml_lof_outliers`` over the ANN top-5 edge table — LOF as it runs
-    at 100 TB: k-distance → reachability → lrd → LOF are all narrow
-    joins/aggs on the 5n ANN edge set, so outlier detection costs the
-    Σ bucket² candidate pass plus noise. Same deterministic grid
-    (d = 1 − round4 cosine) and the same fixed k=5 denominators as the
-    exact op, replayed identically by the oracle."""
-    t5 = _ann_edge_table_df(spark, sf).select(
-        "u", "v", (1.0 - F.col("c")).alias("d")
-    )
-    kd = t5.groupBy("u").agg(F.max("d").alias("kdist"))
-    reach = t5.join(
-        kd.select(F.col("u").alias("v"), F.col("kdist").alias("kdist_v")), "v"
-    ).select("u", "v", F.greatest(F.col("kdist_v"), F.col("d")).alias("rd"))
-    lrd = reach.groupBy("u").agg((1.0 / (F.sum("rd") / 5.0)).alias("lrd"))
-    lof = (
-        t5.join(lrd.select(F.col("u").alias("v"), F.col("lrd").alias("lrd_v")), "v")
-        .join(lrd, "u")
-        .groupBy("u", "lrd")
-        .agg(((F.sum("lrd_v") / 5.0) / F.first("lrd")).alias("lof"))
-    )
-    return lof.join(kd, "u").select(
-        F.col("u").alias("vec_id"),
-        round4(F.col("kdist")).alias("kdist"),
-        round4(F.col("lof")).alias("lof"),
-        (F.col("lof") > 1.5).alias("is_outlier"),
-    )
-
-
-@query(
-    "llm_hubness_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        kocc AS (
-            SELECT nv.vec_id,
-                   CAST(COALESCE(t.cnt, 0) AS BIGINT) AS k_occ
-            FROM ann_nv nv LEFT JOIN (
-                SELECT v, COUNT(*) AS cnt FROM ann_topk GROUP BY v
-            ) t ON nv.vec_id = t.v
-        ),
-        s AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   {sql_dsum('CAST(k_occ AS DOUBLE)')} AS s1,
-                   {sql_dsum('CAST(k_occ AS DOUBLE) * k_occ')} AS s2,
-                   {sql_dsum('CAST(k_occ AS DOUBLE) * k_occ * k_occ')} AS s3,
-                   CAST(MAX(k_occ) AS BIGINT) AS max_k_occ,
-                   CAST(SUM(CASE WHEN k_occ = 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_antihubs
-            FROM kocc
-        )
-        SELECT n AS n_vecs, max_k_occ, n_antihubs,
-               {sql_round4('s1 / n')} AS mean_k_occ,
-               {sql_round4(
-                   '(s3 / n - 3.0 * (s1 / n) * (s2 / n)'
-                   ' + 2.0 * POWER(s1 / n, 3))'
-                   ' / POWER(s2 / n - POWER(s1 / n, 2), 1.5)'
-               )} AS k_occ_skewness
-        FROM s
-    """,
-    tags=("llm", "embedding", "audit", "graph", "ann"),
-)
-def llm_hubness_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``llm_hubness`` over the ANN top-5 graph — the hubness audit a real
-    retrieval deployment actually runs (the production neighbor lists ARE
-    the ANN lists; hub pathology in the served graph is what wrecks
-    retrieval, whatever the exact graph looks like). k-occurrence counts
-    ride the persisted Σ bucket² edge table; mean k-occ < 5 here (unlike
-    the exact graph's conservation) because bucket-starved anchors have
-    short lists — the oracle replays that too."""
-    topk = _ann_edge_table_df(spark, sf).select("v")
-    em = load_table(spark, sf, "embeddings").select("vec_id")
-    cnt = topk.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    kocc = em.join(cnt, em["vec_id"] == cnt["v"], "left").select(
-        F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("k_occ")
-    )
-    x = F.col("k_occ").cast("double")
-    s = kocc.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        dsum(x).alias("s1"),
-        dsum(x * x).alias("s2"),
-        dsum(x * x * x).alias("s3"),
-        F.max("k_occ").cast("bigint").alias("max_k_occ"),
-        F.sum(F.when(F.col("k_occ") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_antihubs"),
-    )
-    n = F.col("n")
-    m1, m2, m3 = F.col("s1") / n, F.col("s2") / n, F.col("s3") / n
-    skew = F.try_divide(
-        m3 - 3.0 * m1 * m2 + 2.0 * F.pow(m1, 3),
-        F.pow(m2 - F.pow(m1, 2), 1.5),
-    )
-    return s.select(
-        n.alias("n_vecs"),
-        "max_k_occ",
-        "n_antihubs",
-        round4(m1).alias("mean_k_occ"),
-        round4(skew).alias("k_occ_skewness"),
-    )
-
-
-@query(
-    "graph_local_clustering_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        adj AS (
-            SELECT u AS v, v AS nb FROM ann_mutual
-            UNION ALL
-            SELECT v AS v, u AS nb FROM ann_mutual
-        ),
-        deg AS (
-            SELECT v, COUNT(*) AS d FROM adj GROUP BY v
-        ),
-        wedges AS (
-            SELECT a.v, a.nb AS x, b.nb AS y
-            FROM adj a JOIN adj b ON a.v = b.v AND a.nb < b.nb
-        ),
-        closed AS (
-            SELECT w.v, COUNT(*) AS n_closed
-            FROM wedges w JOIN ann_mutual m ON w.x = m.u AND w.y = m.v
-            GROUP BY w.v
-        )
-        SELECT deg.v AS vec_id,
-               CAST(deg.d AS BIGINT) AS degree,
-               CAST(COALESCE(closed.n_closed, 0) AS BIGINT) AS closed_wedges,
-               {sql_round4(
-                   'CAST(COALESCE(closed.n_closed, 0) AS DOUBLE)'
-                   ' / (deg.d * (deg.d - 1) / 2)'
-               )} AS local_cc
-        FROM deg LEFT JOIN closed ON deg.v = closed.v
-        WHERE deg.d >= 2
-    """,
-    tags=("graph", "ann"),
-)
-def graph_local_clustering_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_local_clustering`` on the mutual ANN edge list — per-node
-    clustering texture of the graph that exists in production. Degree is
-    still ≤ 5, so the wedge fan-out stays ≤ C(5,2) = 10 per node and the
-    whole analysis is edges × 10 regardless of corpus size; only the edge
-    source changed (Σ bucket² candidates, replayed by the oracle)."""
-    edges = _ann_mutual_df(spark, sf)
-    adj = edges.select(F.col("u").alias("v"), F.col("v").alias("nb")).unionByName(
-        edges.select(F.col("v").alias("v"), F.col("u").alias("nb"))
-    )
-    deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    a = adj.select("v", F.col("nb").alias("x"))
-    b = adj.select(F.col("v").alias("v2"), F.col("nb").alias("y"))
-    wedges = a.join(
-        b, (F.col("v") == F.col("v2")) & (F.col("x") < F.col("y"))
-    ).select("v", "x", "y")
-    e2 = edges.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
-    closed = (
-        wedges.join(
-            e2, (F.col("x") == F.col("eu")) & (F.col("y") == F.col("ev")),
-        )
-        .groupBy(F.col("v").alias("node"))
-        .agg(F.count(F.lit(1)).alias("n_closed"))
-    )
-    out = deg.filter(F.col("d") >= 2).join(
-        closed, deg.v == closed.node, "left"
-    )
-    nc = F.coalesce(F.col("n_closed"), F.lit(0))
-    return out.select(
-        deg.v.alias("vec_id"),
-        F.col("d").cast("bigint").alias("degree"),
-        nc.cast("bigint").alias("closed_wedges"),
-        round4(
-            nc.cast("double") / (F.col("d") * (F.col("d") - 1) / 2)
-        ).alias("local_cc"),
-    )
-
-
-@query(
-    "graph_khop_reach_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        adj AS MATERIALIZED (
-            SELECT u AS src, v AS dst FROM ann_mutual
-            UNION ALL
-            SELECT v AS src, u AS dst FROM ann_mutual
-        ),
-        seeds AS (SELECT vec_id AS seed FROM ann_nv WHERE vec_id % 97 = 0),
-        h1 AS (
-            SELECT DISTINCT s.seed, a.dst
-            FROM seeds s JOIN adj a ON a.src = s.seed
-        ),
-        reach AS (
-            SELECT seed, dst FROM h1
-            UNION
-            SELECT h1.seed, a2.dst
-            FROM h1 JOIN adj a2 ON a2.src = h1.dst
-        )
-        SELECT s.seed,
-               CAST(COALESCE(c1.n, 0) AS BIGINT) AS n_hop1,
-               CAST(COALESCE(c2.n, 0) AS BIGINT) AS n_reach2
-        FROM seeds s
-        LEFT JOIN (SELECT seed, COUNT(*) AS n FROM h1 GROUP BY seed) c1
-               ON c1.seed = s.seed
-        LEFT JOIN (SELECT seed, COUNT(*) AS n
-                   FROM reach WHERE dst <> seed GROUP BY seed) c2
-               ON c2.seed = s.seed
-    """,
-    tags=("workload", "graph", "similarity", "ann"),
-)
-def graph_khop_reach_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_khop_reach`` on the mutual ANN edge list — navigability of
-    the graph a 100 TB deployment actually builds. BFS stages unchanged
-    (two adjacency self-joins, frontier dedup, fan-out ≤ k per hop); only
-    the edge source differs (Σ bucket² candidates, oracle-replayed)."""
-    mutual = _ann_mutual_df(spark, sf)
-    nv = load_table(spark, sf, "embeddings").select("vec_id")
-    adj = mutual.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        mutual.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    seeds = nv.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("seed")
-    )
-    h1 = (
-        seeds.join(adj, adj["src"] == seeds["seed"])
-        .select("seed", "dst")
-        .distinct()
-    )
-    a2 = adj.select(F.col("src").alias("src2"), F.col("dst").alias("dst2"))
-    reach = h1.select("seed", "dst").union(
-        h1.join(a2, a2["src2"] == h1["dst"]).select("seed", F.col("dst2").alias("dst"))
-    ).distinct()
-    c1 = h1.groupBy("seed").agg(F.count(F.lit(1)).alias("n"))
-    c2 = (
-        reach.filter(F.col("dst") != F.col("seed"))
-        .groupBy("seed")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        seeds.join(c1.withColumnRenamed("n", "n1"), "seed", "left")
-        .join(c2.withColumnRenamed("n", "n2"), "seed", "left")
-        .select(
-            "seed",
-            F.coalesce(F.col("n1"), F.lit(0)).cast("bigint").alias("n_hop1"),
-            F.coalesce(F.col("n2"), F.lit(0)).cast("bigint").alias("n_reach2"),
-        )
-    )
-
-
-@query(
-    "graph_link_prediction_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        adj AS MATERIALIZED (
-            SELECT u, v FROM ann_mutual UNION ALL SELECT v, u FROM ann_mutual
-        ),
-        deg AS (
-            SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY u
-        ),
-        wedge AS (
-            SELECT a1.u AS u, a2.u AS v, CAST(COUNT(*) AS BIGINT) AS cn
-            FROM adj a1 JOIN adj a2
-              ON a1.v = a2.v AND a1.u < a2.u
-            GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT w.u, w.v, w.cn,
-                   FLOOR(w.cn / CAST(du.d + dv.d - w.cn AS DOUBLE)
-                         * 10000.0 + 0.5) / 10000.0 AS jaccard
-            FROM wedge w
-            JOIN deg du ON du.u = w.u
-            JOIN deg dv ON dv.u = w.v
-            LEFT JOIN ann_mutual m ON m.u = w.u AND m.v = w.v
-            WHERE m.u IS NULL
-        )
-        SELECT u, v, cn, jaccard,
-               CAST(rnk AS INT) AS rnk
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY jaccard DESC, u, v) AS rnk
-            FROM cand
-        ) WHERE rnk <= 20
-    """,
-    tags=("workload", "graph", "similarity", "ann"),
-)
-def graph_link_prediction_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_link_prediction`` on the mutual ANN edge list: wedge-join
-    candidates (distance exactly 2, Σ deg² ≤ n·k² work), Jaccard scoring
-    and anti-join of existing edges unchanged; candidate generation is
-    the Σ bucket² ANN pass the oracle replays bit-for-bit."""
-    mutual = _ann_mutual_df(spark, sf)
-    adj = mutual.unionAll(mutual.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    wedge = (
-        adj.alias("a1")
-        .join(
-            adj.alias("a2"),
-            (F.col("a1.v") == F.col("a2.v")) & (F.col("a1.u") < F.col("a2.u")),
-        )
-        .groupBy(F.col("a1.u").alias("u"), F.col("a2.u").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cn"))
-    )
-    cand = (
-        wedge.join(deg.alias("du"), wedge.u == F.col("du.u"))
-        .join(deg.alias("dv"), wedge.v == F.col("dv.u"))
-        .join(
-            mutual.alias("m"),
-            (wedge.u == F.col("m.u")) & (wedge.v == F.col("m.v")),
-            "left_anti",
-        )
-        .select(
-            wedge.u,
-            wedge.v,
-            "cn",
-            (
-                F.floor(
-                    F.col("cn")
-                    / (F.col("du.d") + F.col("dv.d") - F.col("cn")).cast("double")
-                    * 10000.0
-                    + 0.5
-                )
-                / 10000.0
-            ).alias("jaccard"),
-        )
-    )
-    rnk = F.row_number().over(
-        W.orderBy(F.desc("jaccard"), F.asc("u"), F.asc("v"))
-    )
-    return (
-        cand.withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= 20)
-        .withColumn("rnk", F.col("rnk").cast("int"))
-    )
-
-
-@query(
-    "graph_assortativity_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        adj AS MATERIALIZED (
-            SELECT u, v FROM ann_mutual UNION ALL SELECT v, u FROM ann_mutual
-        ),
-        deg AS (
-            SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY u
-        ),
-        ed AS (
-            SELECT du.d AS x, dv.d AS y
-            FROM adj JOIN deg du ON adj.u = du.u
-                     JOIN deg dv ON adj.v = dv.u
-        ),
-        s AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS m,
-                   CAST(SUM(x) AS DOUBLE) AS sx,
-                   CAST(SUM(y) AS DOUBLE) AS sy,
-                   CAST(SUM(x * y) AS DOUBLE) AS sxy,
-                   CAST(SUM(x * x) AS DOUBLE) AS sxx,
-                   CAST(SUM(y * y) AS DOUBLE) AS syy
-            FROM ed
-        )
-        SELECT CAST(m AS BIGINT) AS n_directed_edges,
-               FLOOR((m * sxy - sx * sy)
-                     / (SQRT(m * sxx - sx * sx) * SQRT(m * syy - sy * sy))
-                     * 10000.0 + 0.5) / 10000.0 AS assortativity
-        FROM s
-    """,
-    tags=("workload", "graph", "ann"),
-)
-def graph_assortativity_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_assortativity`` on the mutual ANN edge list — the hubs-to-
-    hubs diagnostic of the served neighbor graph (hub pathology in the
-    ANN index is exactly what this op exists to flag). Five integer
-    power sums, one closed-form expression, identical on both engines."""
-    mutual = _ann_mutual_df(spark, sf)
-    adj = mutual.unionAll(
-        mutual.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    ed = (
-        adj.alias("e")
-        .join(deg.alias("du"), F.col("e.u") == F.col("du.u"))
-        .join(deg.alias("dv"), F.col("e.v") == F.col("dv.u"))
-        .select(F.col("du.d").alias("x"), F.col("dv.d").alias("y"))
-    )
-    s = ed.agg(
-        F.count(F.lit(1)).cast("double").alias("m"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
-    )
-    m, sx, sy = F.col("m"), F.col("sx"), F.col("sy")
-    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
-    return s.select(
-        m.cast("bigint").alias("n_directed_edges"),
-        (
-            F.floor(
-                F.try_divide(
-                    m * sxy - sx * sy,
-                    F.sqrt(m * sxx - sx * sx) * F.sqrt(m * syy - sy * sy),
-                )
-                * 10000.0
-                + 0.5
-            )
-            / 10000.0
-        ).alias("assortativity"),
-    )
-
-
-@query(
-    "graph_kcore_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        deg1 AS (
-            SELECT node, COUNT(*) AS d FROM (
-                SELECT u AS node FROM ann_mutual
-                UNION ALL SELECT v FROM ann_mutual
-            ) GROUP BY node
-        ),
-        keep1 AS MATERIALIZED (SELECT node FROM deg1 WHERE d >= 2),
-        e1 AS MATERIALIZED (
-            SELECT m.u, m.v FROM ann_mutual m
-            JOIN keep1 a ON m.u = a.node
-            JOIN keep1 b ON m.v = b.node
-        ),
-        deg2 AS (
-            SELECT node, COUNT(*) AS d FROM (
-                SELECT u AS node FROM e1
-                UNION ALL SELECT v FROM e1
-            ) GROUP BY node
-        ),
-        keep2 AS MATERIALIZED (SELECT node FROM deg2 WHERE d >= 2),
-        e2 AS (
-            SELECT e.u, e.v FROM e1 e
-            JOIN keep2 a ON e.u = a.node
-            JOIN keep2 b ON e.v = b.node
-        )
-        SELECT CAST(0 AS BIGINT) AS peel_round,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM ann_nv) AS n_nodes,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM ann_mutual) AS n_edges
-        UNION ALL
-        SELECT CAST(1 AS BIGINT),
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM keep1),
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM e1)
-        UNION ALL
-        SELECT CAST(2 AS BIGINT),
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM keep2),
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM e2)
-    """,
-    tags=("workload", "graph", "similarity", "ann"),
-)
-def graph_kcore_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_kcore`` on the mutual ANN edge list: two unrolled 2-core
-    peel rounds, each a degree count + two semi-joins — O(|E|) per round.
-    Same lazy ``localCheckpoint`` per round (the lineage-truncation that
-    keeps iterative DataFrame loops from exponential re-expansion,
-    SCALE.md §5); only the edge source changed."""
-    mutual = _ann_mutual_df(spark, sf)
-    nv = load_table(spark, sf, "embeddings").select("vec_id")
-
-    def degrees(edges: DataFrame) -> DataFrame:
-        return (
-            edges.select(F.col("u").alias("node"))
-            .unionAll(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-
-    keep1 = (
-        degrees(mutual).filter(F.col("d") >= 2).select("node")
-        .localCheckpoint(eager=False)
-    )
-    e1 = (
-        mutual.join(keep1.withColumnRenamed("node", "u"), "u", "left_semi")
-        .join(keep1.withColumnRenamed("node", "v"), "v", "left_semi")
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
-    keep2 = (
-        degrees(e1).filter(F.col("d") >= 2).select("node")
-        .localCheckpoint(eager=False)
-    )
-    e2 = (
-        e1.join(keep2.withColumnRenamed("node", "u"), "u", "left_semi")
-        .join(keep2.withColumnRenamed("node", "v"), "v", "left_semi")
-        .select("u", "v")
-    )
-
-    def row(r: int, nodes: DataFrame, edges: DataFrame) -> DataFrame:
-        n = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-        e = edges.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-        return n.crossJoin(e).select(
-            F.lit(r).cast("bigint").alias("peel_round"), "n_nodes", "n_edges"
-        )
-
-    return row(0, nv, mutual).unionByName(row(1, keep1, e1)).unionByName(
-        row(2, keep2, e2)
-    )
-
-
-@query(
-    "graph_modularity_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        lab AS (SELECT vec_id, label FROM embeddings),
-        el AS (
-            SELECT m.u, m.v, la.label AS lu, lb.label AS lv
-            FROM ann_mutual m
-            JOIN lab la ON m.u = la.vec_id
-            JOIN lab lb ON m.v = lb.vec_id
-        ),
-        mm AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM el),
-        ew AS (
-            SELECT lu AS label, COUNT(*) AS e_within
-            FROM el WHERE lu = lv GROUP BY lu
-        ),
-        dg AS (
-            SELECT label, COUNT(*) AS d_sum FROM (
-                SELECT lu AS label FROM el
-                UNION ALL SELECT lv FROM el
-            ) GROUP BY label
-        )
-        SELECT CAST(dg.label AS INT) AS label,
-               CAST(COALESCE(ew.e_within, 0) AS BIGINT) AS e_within,
-               CAST(dg.d_sum AS BIGINT) AS degree_sum,
-               {sql_round4(
-                   'COALESCE(ew.e_within, 0) / mm.m'
-                   ' - (dg.d_sum / (2.0 * mm.m)) * (dg.d_sum / (2.0 * mm.m))')}
-                   AS q_contrib
-        FROM dg LEFT JOIN ew ON dg.label = ew.label
-        CROSS JOIN mm
-    """,
-    tags=("workload", "graph", "similarity", "ann"),
-)
-def graph_modularity_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_modularity`` on the mutual ANN edge list: do the labels
-    line up with the geometry of the graph retrieval will actually use?
-    Two label hash-joins + two alphabet-bounded aggregates on top of the
-    Σ bucket² candidate pass."""
-    mutual = _ann_mutual_df(spark, sf)
-    lab = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    el = (
-        mutual.join(
-            lab.withColumnRenamed("vec_id", "u").withColumnRenamed("label", "lu"),
-            "u",
-        )
-        .join(
-            lab.withColumnRenamed("vec_id", "v").withColumnRenamed("label", "lv"),
-            "v",
-        )
-        .select("u", "v", "lu", "lv")
-    )
-    mm = el.agg(F.count(F.lit(1)).cast("double").alias("m"))
-    ew = (
-        el.filter(F.col("lu") == F.col("lv"))
-        .groupBy(F.col("lu").alias("label"))
-        .agg(F.count(F.lit(1)).alias("e_within"))
-    )
-    dg = (
-        el.select(F.col("lu").alias("label"))
-        .unionAll(el.select(F.col("lv").alias("label")))
-        .groupBy("label")
-        .agg(F.count(F.lit(1)).alias("d_sum"))
-    )
-    ewc = F.coalesce(F.col("e_within"), F.lit(0))
-    return (
-        dg.join(ew, "label", "left")
-        .crossJoin(F.broadcast(mm))
-        .select(
-            F.col("label").cast("int").alias("label"),
-            ewc.cast("bigint").alias("e_within"),
-            F.col("d_sum").cast("bigint").alias("degree_sum"),
-            round4(
-                F.try_divide(ewc, F.col("m"))
-                - (F.col("d_sum") / (2.0 * F.col("m")))
-                * (F.col("d_sum") / (2.0 * F.col("m")))
-            ).alias("q_contrib"),
-        )
-    )
-
-
-@query(
-    "graph_degree_distribution_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        deg AS (
-            SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
-                SELECT u AS node FROM ann_mutual
-                UNION ALL SELECT v FROM ann_mutual
-            ) GROUP BY node
-        )
-        SELECT d AS degree,
-               CAST(COUNT(*) AS BIGINT) AS n_nodes,
-               {sql_round4(
-                   'CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM deg)'
-               )} AS share,
-               {sql_round4(
-                   'CAST(SUM(COUNT(*)) OVER (ORDER BY d DESC) AS DOUBLE)'
-                   ' / (SELECT COUNT(*) FROM deg)'
-               )} AS ccdf
-        FROM deg GROUP BY d
-    """,
-    tags=("graph", "stats", "ann"),
-)
-def graph_degree_distribution_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``graph_degree_distribution`` of the mutual ANN edge list — the
-    shuffle-skew forecast for every downstream graph op at 100 TB is the
-    degree tail of THIS graph, not the exact one. Degree count + tiny
-    histogram + CCDF window, all on the Σ bucket² edge set."""
-    mutual = _ann_mutual_df(spark, sf)
-    deg = (
-        mutual.select(F.col("u").alias("node"))
-        .unionAll(mutual.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    n_nodes_total = deg.count()
-    wc = W.orderBy(F.desc("degree")).rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    hist = deg.groupBy(F.col("d").alias("degree")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes")
-    )
-    return hist.select(
-        "degree",
-        "n_nodes",
-        round4(F.col("n_nodes").cast("double") / F.lit(float(n_nodes_total))).alias(
-            "share"
-        ),
-        round4(
-            F.sum("n_nodes").over(wc).cast("double") / F.lit(float(n_nodes_total))
-        ).alias("ccdf"),
-    )
-
-
-@query(
-    "ml_oversample_interpolate_ann",
-    oracle=f"""
-        WITH {_SQL_ANN_SCORED},
-        {_SQL_ANN_T5},
-        {_SQL_ANN_MUTUAL},
-        labeled AS (
-            SELECT m.u, m.v, ea.label,
-                   list_transform(list_zip(ea.embedding, eb.embedding),
-                                  s -> (CAST(s[1] AS DOUBLE) + s[2]) / 2.0)
-                       AS mid
-            FROM ann_mutual m
-            JOIN embeddings ea ON m.u = ea.vec_id
-            JOIN embeddings eb ON m.v = eb.vec_id
-            WHERE ea.label = eb.label
-        ),
-        normed AS (
-            SELECT label,
-                   SQRT(list_reduce(list_prepend(0.0,
-                       list_transform(list_zip(mid, mid),
-                                      s -> s[1] * s[2])),
-                       (acc, x) -> acc + x)) AS mid_norm
-            FROM labeled
-        )
-        SELECT label,
-               CAST(COUNT(*) AS BIGINT) AS n_synthetic,
-               {sql_round4(sql_davg('mid_norm'))} AS mean_mid_norm
-        FROM normed
-        GROUP BY label
-    """,
-    tags=("ml", "sampling", "embedding", "ann"),
-)
-def ml_oversample_interpolate_ann(spark: SparkSession, sf: str) -> DataFrame:
-    """``ml_oversample_interpolate`` (SMOTE midpoints) over the mutual
-    ANN edge list — synthetic minority samples interpolated between
-    actual ANN neighbors, which is how SMOTE runs when the neighbor
-    search itself must be approximate. Midpoint + norm stay array-local
-    zip/fold projections; neighbor search cost is the Σ bucket² pass."""
-    from datapipelines_python_spark.operators.llm import dot
-
-    edges = _ann_mutual_df(spark, sf)
-    emb = load_table(spark, sf, "embeddings")
-    ea = emb.select(
-        F.col("vec_id").alias("u"),
-        F.col("embedding").alias("emb_a"),
-        F.col("label").alias("label_a"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("v"),
-        F.col("embedding").alias("emb_b"),
-        F.col("label").alias("label_b"),
-    )
-    labeled = (
-        edges.join(ea, "u")
-        .join(eb, "v")
-        .filter(F.col("label_a") == F.col("label_b"))
-        .select(
-            F.col("label_a").alias("label"),
-            F.zip_with(
-                F.col("emb_a").cast("array<double>"),
-                F.col("emb_b").cast("array<double>"),
-                lambda x, y: (x + y) / 2.0,
-            ).alias("mid"),
-        )
-    )
-    normed = labeled.select(
-        "label", F.sqrt(dot("mid", "mid")).alias("mid_norm")
-    )
-    return normed.groupBy("label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_synthetic"),
-        round4(davg(F.col("mid_norm"))).alias("mean_mid_norm"),
-    )
-
-
-_MUTUAL_5NN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _mutual_5nn(spark: SparkSession, sf: str) -> DataFrame:
-    """Undirected (u < v) mutual-5-NN cosine edges of the embedding corpus
-    — the fixture-scale twin of the bucketed-ANN edge list that feeds
-    every graph op at 100 TB (see graph_triangle_count docstring).
-
-    Session-cached: the five graph ops all consume this one edge list, so
-    it is built (and persisted) once per (session, sf) — exactly how a
-    real deployment treats the ANN index: a shared, materialized artifact,
-    not a per-query rebuild. Cache entries are lazy DataFrames; a
-    clearCache() merely drops the persisted blocks and the next use
-    recomputes."""
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _MUTUAL_5NN_CACHE.get(key)
-    if cached is not None:
-        if not cached.storageLevel.useMemory:  # re-pin after clearCache()
-            cached.persist()
-        return cached
-    p = _cosine_pairs(spark, sf)
-    w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
-    topk = (
-        p.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("u", "v")
-    )
-    # persist: every caller fans out over this edge list several times;
-    # without it each branch would recompute the O(n^2) candidate pass.
-    mutual = (
-        topk.alias("x")
-        .join(
-            topk.alias("y"),
-            (F.col("x.u") == F.col("y.v")) & (F.col("x.v") == F.col("y.u")),
-        )
-        .filter(F.col("x.u") < F.col("x.v"))
-        .select(F.col("x.u").alias("u"), F.col("x.v").alias("v"))
-        .persist()
-    )
-    _MUTUAL_5NN_CACHE[key] = mutual
-    return mutual
-
-
-@query(
+@knn_twins(
     "graph_kcore",
-    oracle=f"""
-        WITH {_SQL_MUTUAL_5NN},
+    """
         deg1 AS (
             SELECT node, COUNT(*) AS d FROM (
                 SELECT u AS node FROM mutual
@@ -6751,9 +4895,9 @@ def _mutual_5nn(spark: SparkSession, sf: str) -> DataFrame:
                (SELECT CAST(COUNT(*) AS BIGINT) FROM keep2),
                (SELECT CAST(COUNT(*) AS BIGINT) FROM e2)
     """,
-    tags=("workload", "graph", "similarity"),
+    ("workload", "graph", "similarity"),
 )
-def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
+def graph_kcore(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """2-core peeling of the mutual-5-NN cosine graph, two unrolled
     rounds: drop nodes of degree < 2, recompute degrees on the induced
     subgraph, drop again — per-round (nodes, edges) counts show how much
@@ -6762,8 +4906,8 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     is a groupBy degree count + two semi-joins back onto the edge list,
     so cost is O(|E|) per round with shuffles keyed on node id — the
     textbook distributed k-core step, and at 100 TB the edge list comes
-    from the bucketed ANN path, never the O(n²) pair product the
-    fixture-scale oracle replays. Peeling to a FIXED round count (not
+    from the ANN source (``graph_kcore_ann``), never the exact source's
+    O(n²) pair product. Peeling to a FIXED round count (not
     convergence) keeps the plan static and oracle-replayable.
 
     Each round's keep-set and induced edge list is referenced 3× by the
@@ -6776,7 +4920,7 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     Even ``eager=False`` truncates the logical plan immediately — only
     the materialization job is deferred — so plan audits see the same
     truncated shape that executes."""
-    mutual = _mutual_5nn(spark, sf)
+    mutual = src.mutual(spark, sf)
     nv = load_table(spark, sf, "embeddings").select("vec_id")
 
     def degrees(edges: DataFrame) -> DataFrame:
@@ -6977,10 +5121,9 @@ def workload_holt_linear(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "graph_modularity",
-    oracle=f"""
-        WITH {_SQL_MUTUAL_5NN},
+    f"""
         lab AS (SELECT vec_id, label FROM embeddings),
         el AS (
             SELECT m.u, m.v, la.label AS lu, lb.label AS lv
@@ -7009,9 +5152,9 @@ def workload_holt_linear(spark: SparkSession, sf: str) -> DataFrame:
         FROM dg LEFT JOIN ew ON dg.label = ew.label
         CROSS JOIN mm
     """,
-    tags=("workload", "graph", "similarity"),
+    ("workload", "graph", "similarity"),
 )
-def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
+def graph_modularity(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Newman modularity of the label partition on the mutual-5-NN
     cosine graph, per community: Q_c = e_c/m − (d_c/2m)² — do the
     embedding labels line up with the geometry? (Σ Q_c near 0 ⇒ labels
@@ -7020,10 +5163,11 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
     labels twice (key = vec_id, the natural co-partition), then
     everything is label-alphabet-bounded: within-edges count, degree
     sums, one scalar edge total broadcast back. Integer counts →
-    row-wise IEEE contribution → round4. At 100 TB the edge list again
-    comes from the bucketed ANN path; this op adds two hash joins and
-    two tiny aggregates on top of it."""
-    mutual = _mutual_5nn(spark, sf)
+    row-wise IEEE contribution → round4 (``try_divide``: an empty edge
+    list yields no rows, never a division error). At 100 TB the edge
+    list again comes from the ANN source; this op adds two hash joins
+    and two tiny aggregates on top of it."""
+    mutual = src.mutual(spark, sf)
     lab = load_table(spark, sf, "embeddings").select("vec_id", "label")
     el = (
         mutual.join(lab.withColumnRenamed("vec_id", "u").withColumnRenamed("label", "lu"), "u")
@@ -7051,7 +5195,7 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
             ewc.cast("bigint").alias("e_within"),
             F.col("d_sum").cast("bigint").alias("degree_sum"),
             round4(
-                ewc / F.col("m")
+                F.try_divide(ewc, F.col("m"))
                 - (F.col("d_sum") / (2.0 * F.col("m")))
                 * (F.col("d_sum") / (2.0 * F.col("m")))
             ).alias("q_contrib"),
@@ -8542,10 +6686,9 @@ def sql_values_table(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "ml_oversample_interpolate",
-    oracle=f"""
-        WITH {_SQL_MUTUAL_5NN},
+    f"""
         labeled AS (
             SELECT m.u, m.v, ea.label,
                    list_transform(list_zip(ea.embedding, eb.embedding),
@@ -8570,9 +6713,9 @@ def sql_values_table(spark: SparkSession, sf: str) -> DataFrame:
         FROM normed
         GROUP BY label
     """,
-    tags=("ml", "sampling", "embedding"),
+    ("ml", "sampling", "embedding"),
 )
-def ml_oversample_interpolate(spark: SparkSession, sf: str) -> DataFrame:
+def ml_oversample_interpolate(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """SMOTE-style minority oversampling in embedding space: every
     mutual-5NN edge whose endpoints share a label yields one synthetic
     midpoint vector ((a+b)/2 per dimension — interpolation INSIDE the
@@ -8584,7 +6727,7 @@ def ml_oversample_interpolate(spark: SparkSession, sf: str) -> DataFrame:
     same-label edges ⇒ a class too sparse to interpolate safely)."""
     from datapipelines_python_spark.operators.llm import dot
 
-    edges = _mutual_5nn(spark, sf)
+    edges = src.mutual(spark, sf)
     emb = load_table(spark, sf, "embeddings")
     ea = emb.select(
         F.col("vec_id").alias("u"),
@@ -9315,10 +7458,9 @@ def workload_sales_mix_variance(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "graph_local_clustering",
-    oracle=f"""
-        WITH {_SQL_MUTUAL_5NN},
+    f"""
         adj AS (
             SELECT u AS v, v AS nb FROM mutual
             UNION ALL
@@ -9346,9 +7488,9 @@ def workload_sales_mix_variance(spark: SparkSession, sf: str) -> DataFrame:
         FROM deg LEFT JOIN closed ON deg.v = closed.v
         WHERE deg.d >= 2
     """,
-    tags=("graph",),
+    ("graph",),
 )
-def graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
+def graph_local_clustering(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Per-node local clustering coefficient over the shared mutual-5NN
     graph: the fraction of a node's neighbor pairs that are themselves
     connected — the LOCAL texture the global ``graph_triangle_count``
@@ -9359,7 +7501,7 @@ def graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
     edges × 10 regardless of corpus size — the degree-bounded property
     that makes kNN-graph analytics tractable where general-graph
     clustering is not. Consumes the session-cached edge list."""
-    edges = _mutual_5nn(spark, sf)
+    edges = src.mutual(spark, sf)
     adj = edges.select(F.col("u").alias("v"), F.col("v").alias("nb")).unionByName(
         edges.select(F.col("v").alias("v"), F.col("u").alias("nb"))
     )
@@ -10277,10 +8419,9 @@ def workload_streak_runs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "graph_degree_distribution",
-    oracle=f"""
-        WITH {_SQL_MUTUAL_5NN},
+    f"""
         deg AS (
             SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
                 SELECT u AS node FROM mutual
@@ -10298,9 +8439,9 @@ def workload_streak_runs(spark: SparkSession, sf: str) -> DataFrame:
                )} AS ccdf
         FROM deg GROUP BY d
     """,
-    tags=("graph", "stats"),
+    ("graph", "stats"),
 )
-def graph_degree_distribution(spark: SparkSession, sf: str) -> DataFrame:
+def graph_degree_distribution(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Degree distribution of the mutual-5-NN cosine graph with the
     complementary CDF P(D ≥ d) — the first thing to plot before trusting
     any graph algorithm's cost model: a heavy CCDF tail predicts skewed
@@ -10310,7 +8451,7 @@ def graph_degree_distribution(spark: SparkSession, sf: str) -> DataFrame:
     histogram over the tiny degree domain (mutual-kNN caps degree at
     k=5, which the output verifies). CCDF via a cumulative window on
     ≤6 rows."""
-    mutual = _mutual_5nn(spark, sf)
+    mutual = src.mutual(spark, sf)
     deg = (
         mutual.select(F.col("u").alias("node"))
         .unionAll(mutual.select(F.col("v").alias("node")))
@@ -12733,10 +10874,9 @@ def workload_net_revenue_retention(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "llm_hubness",
-    oracle=f"""
-        WITH {_SQL_MUTUAL_5NN},
+    f"""
         kocc AS (
             SELECT nv.vec_id,
                    CAST(COALESCE(t.cnt, 0) AS BIGINT) AS k_occ
@@ -12763,9 +10903,9 @@ def workload_net_revenue_retention(spark: SparkSession, sf: str) -> DataFrame:
                )} AS k_occ_skewness
         FROM s
     """,
-    tags=("llm", "embedding", "audit", "graph"),
+    ("llm", "embedding", "audit", "graph"),
 )
-def llm_hubness(spark: SparkSession, sf: str) -> DataFrame:
+def llm_hubness(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Hubness audit of the 5-NN cosine graph: the k-occurrence
     distribution (how many points count ME among their 5 nearest) and
     its skewness — THE high-dimensional ANN pathology (Radovanović
@@ -12776,13 +10916,7 @@ def llm_hubness(spark: SparkSession, sf: str) -> DataFrame:
     the signal — near 0 benign, ≫1 says apply the centering this
     corpus's ``llm_embedding_isotropy`` motivates. Directed top-k lists
     come from the shared cached pair table; moments from power sums."""
-    p = _cosine_pairs(spark, sf)
-    w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
-    topk = (
-        p.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("v")
-    )
+    topk = src.top5(spark, sf).select("v")
     em = load_table(spark, sf, "embeddings").select("vec_id")
     cnt = topk.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
     kocc = em.join(cnt, em["vec_id"] == cnt["v"], "left").select(
@@ -14401,26 +12535,10 @@ def workload_frequent_triples(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
+@knn_twins(
     "ml_lof_outliers",
-    oracle=f"""
-        WITH nv AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   SQRT(list_reduce(list_prepend(0.0, list_transform(list_zip(embedding, embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x)) AS norm
-            FROM embeddings
-        ),
-        p AS (
-            SELECT a.vec_id AS u, b.vec_id AS v,
-                   FLOOR((list_reduce(list_prepend(0.0, list_transform(list_zip(a.embedding, b.embedding), s -> CAST(s[1] AS DOUBLE) * s[2])), (acc, x) -> acc + x) / (a.norm * b.norm)) * 10000.0 + 0.5) / 10000.0 AS c
-            FROM nv a JOIN nv b ON a.vec_id <> b.vec_id
-        ),
-        t5 AS (
-            SELECT u, v, 1.0 - c AS d FROM (
-                SELECT u, v, c,
-                       ROW_NUMBER() OVER (PARTITION BY u ORDER BY c DESC, v) AS rn
-                FROM p
-            ) r WHERE rn <= 5
-        ),
+    f"""
+        t5 AS (SELECT u, v, 1.0 - c AS d FROM topk),
         kd AS (SELECT u, MAX(d) AS kdist FROM t5 GROUP BY u),
         reach AS (
             SELECT t5.u, t5.v, GREATEST(kd.kdist, t5.d) AS rd
@@ -14443,27 +12561,21 @@ def workload_frequent_triples(spark: SparkSession, sf: str) -> DataFrame:
                lof.lof > 1.5 AS is_outlier
         FROM lof JOIN kd ON kd.u = lof.u
     """,
-    tags=("ml", "outlier", "density"),
+    ("ml", "outlier", "density"),
 )
-def ml_lof_outliers(spark: SparkSession, sf: str) -> DataFrame:
+def ml_lof_outliers(spark: SparkSession, sf: str, src: EdgeSource) -> DataFrame:
     """Local Outlier Factor (k=5) over the embedding corpus — density-
     based outlier detection that the global z-score/IQR family cannot do
     (a point can be normal globally but isolated from ITS OWN
     neighborhood): k-distance → reachability distance (max(kdist(v),
     d(u,v)) — the smoothing that makes LOF stable inside clusters) →
     local reachability density → LOF = mean neighbor-lrd / own lrd,
-    > 1.5 flagged. The 14th consumer of the shared exact top-K edge
-    table (``_cosine_pairs``): every stage is a narrow join/agg on the
-    5n edge set, so LOF at 100 TB costs whatever the ANN candidate pass
+    > 1.5 flagged. Reads the source's top-5 table: every stage is a
+    narrow join/agg on the 5n edge set, so LOF at 100 TB
+    (``ml_lof_outliers_ann``) costs whatever the ANN candidate pass
     costs, plus noise. Distance = 1 − round4(cosine), matching the edge
     table's portable grid."""
-    pairs = _cosine_pairs(spark, sf)
-    w5 = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
-    t5 = (
-        pairs.withColumn("rn", F.row_number().over(w5))
-        .filter(F.col("rn") <= 5)
-        .select("u", "v", (1.0 - F.col("c")).alias("d"))
-    )
+    t5 = src.top5(spark, sf).select("u", "v", (1.0 - F.col("c")).alias("d"))
     kd = t5.groupBy("u").agg(F.max("d").alias("kdist"))
     reach = t5.join(
         kd.select(F.col("u").alias("v"), F.col("kdist").alias("kdist_v")), "v"

@@ -102,12 +102,9 @@ def rows_equal(a, b) -> bool:
     return len(a) == len(b) and all(approx_equal(x, y) for x, y in zip(a, b))
 
 
-def compare(name: str, spark_df, duck_rel) -> tuple[bool, str]:
-    s_cols = list(spark_df.columns)
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    d_cols = list(duck_rel.columns)
-    d_rows = duck_rel.fetchall()
-
+def compare_rows(s_cols, s_rows, d_cols, d_rows) -> tuple[bool, str]:
+    """Compare Spark ``(cols, rows)`` against DuckDB ``(cols, rows)``:
+    row count, column names, then rows in normalized order."""
     if len(s_rows) != len(d_rows):
         return False, f"rowcount spark={len(s_rows)} duck={len(d_rows)}"
     sc, sr = normalize_result(s_cols, s_rows)
@@ -121,6 +118,11 @@ def compare(name: str, spark_df, duck_rel) -> tuple[bool, str]:
             if not rows_equal(a, b):
                 return False, f"row {i} differs:\n  spark={a}\n  duck ={b}"
     return True, "exact" if exact else "approx (float tolerance — tighten rounding!)"
+
+
+def compare(name: str, spark_df, duck_rel) -> tuple[bool, str]:
+    s_rows = [tuple(r) for r in spark_df.collect()]
+    return compare_rows(list(spark_df.columns), s_rows, list(duck_rel.columns), duck_rel.fetchall())
 
 
 def compare_digest_split(name, spark_df, con, registry) -> tuple[bool, str]:
@@ -149,17 +151,10 @@ def compare_digest_split(name, spark_df, con, registry) -> tuple[bool, str]:
     hot = ", ".join(f"{m}={w:.1f}s" for w, m in walls[:3])
     total = sum(w for w, _ in walls)
 
-    s_cols = list(spark_df.columns)
     s_rows = [tuple(r) for r in spark_df.collect()]
-    if len(s_rows) != len(d_rows):
-        return False, f"rowcount spark={len(s_rows)} duck={len(d_rows)}"
-    sc, sr = normalize_result(s_cols, s_rows)
-    dc, dr = normalize_result(d_cols, d_rows)
-    if [c.lower() for c in sc] != [c.lower() for c in dc]:
-        return False, f"columns spark={sc} duck={dc}"
-    for i, (a, b) in enumerate(zip(sr, dr)):
-        if a != b and not rows_equal(a, b):
-            return False, f"row {i} differs:\n  spark={a}\n  duck ={b}"
+    ok, msg = compare_rows(list(spark_df.columns), s_rows, d_cols, d_rows)
+    if not ok:
+        return ok, msg
     return True, f"oracle {total:.1f}s split over {len(members)} members; hottest: {hot}"
 
 

@@ -40,7 +40,7 @@ def main() -> None:
     reg = get_registry()
     groups: OrderedDict[str, list] = OrderedDict()
     for name, spec in reg.items():
-        fn = spec.raw_fn or spec.fn
+        fn = inspect.unwrap(spec.raw_fn or spec.fn)
         src = inspect.getsourcefile(fn) or "?"
         rel = os.path.relpath(src, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         try:

@@ -54,17 +54,16 @@ FLOOR_ABS_S = 5.0
 
 
 def clear_all_caches(spark) -> None:
-    """Drop Spark's cached tables and the kNN/ANN edge-table dicts, so the
-    next setting recomputes from parquet."""
-    from datapipelines_python_spark.operators import workloads as w
+    """Drop Spark's cached tables and the shared kNN tables, so the next
+    setting recomputes from parquet."""
+    from datapipelines_python_spark.operators.knn import _KNN_CACHE
 
-    for cache in (w._COSINE_PAIRS_CACHE, w._ANN_EDGE_CACHE, w._MUTUAL_5NN_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
+    for df in _KNN_CACHE.values():
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+    _KNN_CACHE.clear()
     spark.catalog.clearCache()
 
 

@@ -10,8 +10,8 @@ truth at sf1 (n = 20 000, where the single-bucket generator runs 8 sign
 bits and each of the 8 bands carries 6 + 4 = 10 bits):
 
 - **ANN recall@5** of the banded-LSH edge table
-  (``workloads._ann_edge_table_df`` — the candidate stream behind all 13
-  ``*_ann`` kNN-graph twins) against the exact top-5 cosine neighbors.
+  (``knn.ANN.top5`` — the top-5 table behind all 13 ``*_ann`` kNN
+  consumers) against the exact top-5 cosine neighbors.
 - **Dedup pair-recall** of ``llm_dedup_embedding`` (single-bucket sign
   LSH + exact rescore, threshold 0.35) against ALL exact pairs with
   cosine ≥ 0.35.
@@ -79,7 +79,7 @@ def main() -> int:
     t_truth = time.time() - t0
 
     from datapipelines_python_spark.session import get_spark
-    from datapipelines_python_spark.operators.workloads import _ann_edge_table_df
+    from datapipelines_python_spark.operators.knn import ANN
     from datapipelines_python_spark.registry import get_registry
 
     spark = get_spark(app_name="recall-sf1")
@@ -87,7 +87,7 @@ def main() -> int:
 
     t0 = time.time()
     pred = {}
-    for row in _ann_edge_table_df(spark, args.sf).collect():
+    for row in ANN.top5(spark, args.sf).collect():
         pred.setdefault(row["u"], set()).add(row["v"])
     t_ann = time.time() - t0
     recalls = [

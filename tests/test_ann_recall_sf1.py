@@ -49,7 +49,7 @@ def corpus():
 
 
 def test_ann_recall_at_5_floor(spark, corpus):
-    from datapipelines_python_spark.operators.workloads import _ann_edge_table_df
+    from datapipelines_python_spark.operators.knn import ANN
 
     ids, Xn = corpus
     n = len(ids)
@@ -63,7 +63,7 @@ def test_ann_recall_at_5_floor(spark, corpus):
         truth[int(ids[row_idx])] = {int(ids[j]) for j in top}
 
     pred: dict[int, set[int]] = {}
-    for row in _ann_edge_table_df(spark, SF1).collect():
+    for row in ANN.top5(spark, SF1).collect():
         pred.setdefault(row["u"], set()).add(row["v"])
     recall = float(
         np.mean([len(pred.get(u, set()) & t) / 5 for u, t in truth.items()])

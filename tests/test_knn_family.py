@@ -1,40 +1,97 @@
-"""The kNN-graph family's shared edge source (VERDICT r1 #2).
+"""The kNN family's two edge sources (``operators/knn.py``).
 
-Round 1's ``_cosine_pairs`` materialized and persisted all n(n-1) cosine
-pairs and every one of its 13 consumers re-windowed that n² table. It now
-builds an exact per-u top-K (K=64) table once — the n² candidate stream
-feeds a top-K window without ever being materialized — and offers a banded
-sign-LSH candidate mode (``SPARK_GRAFT_KNN_CANDIDATES=ann``) for the scale
-path where exact kNN is off the table. These tests pin:
+Each of the 13 kNN consumers has one builder, registered as ``name`` over
+the exact source (a per-u top-K, K=64, table built once — the n² candidate
+stream feeds a top-K window without ever being materialized) and as
+``name_ann`` over the banded sign-LSH source, the scale path where exact
+kNN is off the table. These tests pin:
 
-- the persisted table is K·n-bounded, not n²,
+- each twin pair is one builder, and its two oracles share one tail,
+- the persisted exact table is K·n-bounded, not n²,
 - the K=64 margin safely covers the deepest consumer need
   (top-3-per-cross-label in ``llm_hard_negative_mining``),
-- the ANN mode's plan is bucket-join-shaped (no cartesian / nested-loop),
-- exact-mode result identity is pinned separately by the 12 consumer
-  oracles (scripts/check_oracle.py), which replay the full n² formulation
-  in DuckDB.
+- the ANN plans are bucket-join-shaped (no cartesian / nested-loop),
+- the cached tables are narrowed below a wide static shuffle width,
+- result identity is pinned separately by the consumer oracles
+  (scripts/check_oracle.py), which replay both sources in DuckDB.
 """
 
 from __future__ import annotations
 
-import os
+import inspect
 
 from pyspark.sql import functions as F
 
 from datapipelines_python_spark.catalog import load_table
-from datapipelines_python_spark.operators.workloads import (
-    _KNN_TOPK,
-    _cosine_pairs,
-    _mutual_5nn,
-)
+from datapipelines_python_spark.operators.knn import _KNN_CACHE, _KNN_TOPK, ANN, EXACT
 
 SF = "/root/testdata/sf0.001"
+KNN_CONSUMERS = (
+    "graph_triangle_count",
+    "llm_hard_negative_mining",
+    "ml_knn_classifier",
+    "ml_lof_outliers",
+    "llm_hubness",
+    "graph_local_clustering",
+    "graph_khop_reach",
+    "graph_link_prediction",
+    "graph_assortativity",
+    "graph_kcore",
+    "graph_modularity",
+    "graph_degree_distribution",
+    "ml_oversample_interpolate",
+)
+
+
+def test_knn_twins_share_builder_and_oracle_tail():
+    """``name`` and ``name_ann`` are one builder over two edge sources,
+    and each oracle is its source's prefix followed by one shared tail."""
+    from datapipelines_python_spark.registry import get_registry
+
+    reg = get_registry()
+    heads = (f"WITH {EXACT.sql}", f"WITH {ANN.sql}")
+    for name in KNN_CONSUMERS:
+        exact, ann = reg[name], reg[name + "_ann"]
+        assert inspect.unwrap(exact.raw_fn) is inspect.unwrap(ann.raw_fn), name
+        assert exact.oracle.startswith(heads[0]), name
+        assert ann.oracle.startswith(heads[1]), name
+        assert exact.oracle[len(heads[0]):] == ann.oracle[len(heads[1]):], name
+    assert {n for n in reg if n.endswith("_ann")} == {
+        n + "_ann" for n in KNN_CONSUMERS
+    }
+
+
+def _drop_knn_cache():
+    for df in _KNN_CACHE.values():
+        df.unpersist()
+    _KNN_CACHE.clear()
+
+
+def test_cached_tables_narrowed_at_wide_shuffle(spark):
+    """Spark keeps a cached plan's output partitioning, so each shared
+    table is narrowed before it is persisted: built at 200 shuffle
+    partitions, none may keep more partitions than the session has
+    cores."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        _drop_knn_cache()
+        EXACT.mutual(spark, SF)
+        ANN.top5(spark, SF)
+        assert {k[2:] for k in _KNN_CACHE} == {
+            ("exact", "pairs"), ("exact", "mutual"), ("ann", "top5")
+        }
+        cores = spark.sparkContext.defaultParallelism
+        for key, df in _KNN_CACHE.items():
+            assert df.rdd.getNumPartitions() <= cores, key
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _drop_knn_cache()
 
 
 def test_pairs_table_is_topk_bounded(spark):
     n = load_table(spark, SF, "embeddings").count()
-    pairs = _cosine_pairs(spark, SF)
+    pairs = EXACT.pairs(spark, SF)
     cnt = pairs.count()
     assert cnt <= _KNN_TOPK * n, f"{cnt} rows > K*n = {_KNN_TOPK * n}"
     assert cnt > 5 * n  # sanity: deep enough for every top-5 consumer
@@ -48,7 +105,7 @@ def test_topk_margin_covers_hard_negative_mining(spark):
     the top-K table; assert every anchor has >=10 cross-label rows in its
     top-64 (>3x margin), so the K truncation can never clip its answer."""
     lab = load_table(spark, SF, "embeddings").select("vec_id", "label")
-    pairs = _cosine_pairs(spark, SF)
+    pairs = EXACT.pairs(spark, SF)
     cross = (
         pairs.join(lab.select(F.col("vec_id").alias("u"), F.col("label").alias("lu")), "u")
         .join(lab.select(F.col("vec_id").alias("v"), F.col("label").alias("lv")), "v")
@@ -63,25 +120,6 @@ def test_topk_margin_covers_hard_negative_mining(spark):
     assert min_cross >= 10, f"margin too thin: min cross-label depth {min_cross}"
 
 
-def test_ann_candidate_mode_is_bucket_join(spark):
-    os.environ["SPARK_GRAFT_KNN_CANDIDATES"] = "ann"
-    try:
-        pairs = _cosine_pairs(spark, SF)
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        n = load_table(spark, SF, "embeddings").count()
-        cnt = pairs.count()
-        assert cnt <= _KNN_TOPK * n
-        # ANN survivors per u are capped by bucket co-occupancy — far below
-        # the exact K=64 everywhere on isotropic fixtures
-        mean_depth = cnt / n
-        assert mean_depth < _KNN_TOPK, f"ann mode saturated top-K ({mean_depth})"
-        pairs.unpersist()
-    finally:
-        del os.environ["SPARK_GRAFT_KNN_CANDIDATES"]
-
-
 def test_registered_ann_twins_plan_gate(spark):
     """VERDICT r2 #2: the ANN candidate path is now *registered* (not an
     env-var override). Gate the plans: the candidate stream must be the
@@ -90,11 +128,10 @@ def test_registered_ann_twins_plan_gate(spark):
     one, not n². ``graph_triangle_count_ann`` is allowed its final
     three-single-row-aggregate crossJoin (the repo-wide sanctioned scalar
     assembly pattern) but nothing else nested-loop-shaped."""
-    from datapipelines_python_spark.operators.workloads import _ann_scored_pairs
     from datapipelines_python_spark.registry import get_registry
 
     cand_plan = (
-        _ann_scored_pairs(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        ANN.pairs(spark, SF)._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in cand_plan
     assert "BroadcastNestedLoopJoin" not in cand_plan
@@ -137,9 +174,7 @@ def test_registered_ann_twins_plan_gate(spark):
 def test_ann_edge_table_shape(spark):
     """The registered ANN edge table is per-u top-<=5, rank-dense from 1,
     and never pairs a vector with itself."""
-    from datapipelines_python_spark.operators.workloads import _ann_edge_table_df
-
-    edges = _ann_edge_table_df(spark, SF)
+    edges = ANN.top5(spark, SF)
     assert edges.filter(F.col("u") == F.col("v")).count() == 0
     per_u = edges.groupBy("u").agg(
         F.count(F.lit(1)).alias("n"), F.max("rank").alias("mx"), F.min("rank").alias("mn")
@@ -151,7 +186,7 @@ def test_ann_edge_table_shape(spark):
 
 
 def test_mutual_edges_symmetric_undirected(spark):
-    edges = _mutual_5nn(spark, SF)
+    edges = EXACT.mutual(spark, SF)
     assert edges.filter(F.col("u") >= F.col("v")).count() == 0
     # every edge's endpoints are real vec_ids
     ids = load_table(spark, SF, "embeddings").select(F.col("vec_id").alias("u"))
@@ -163,22 +198,8 @@ def test_ann_mode_recall_measured(spark):
     ISOTROPIC fixtures recover a meaningful but partial fraction of the
     exact top-5 (the docstring's ~1/3 claim). Deterministic, so a band is
     assertable; a real clustered corpus would sit far higher."""
-    exact = _cosine_pairs(spark, SF)
-    w = __import__("pyspark.sql.window", fromlist=["Window"]).Window
-    top5 = lambda df: (  # noqa: E731
-        df.withColumn(
-            "rn",
-            F.row_number().over(w.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))),
-        )
-        .filter(F.col("rn") <= 5)
-        .select("u", "v")
-    )
-    exact5 = top5(exact)
-    os.environ["SPARK_GRAFT_KNN_CANDIDATES"] = "ann"
-    try:
-        ann5 = top5(_cosine_pairs(spark, SF))
-    finally:
-        del os.environ["SPARK_GRAFT_KNN_CANDIDATES"]
+    exact5 = EXACT.top5(spark, SF).select("u", "v")
+    ann5 = ANN.top5(spark, SF).select("u", "v")
     n_exact = exact5.count()
     n_hit = exact5.join(ann5, ["u", "v"]).count()
     recall = n_hit / n_exact
@@ -239,14 +260,12 @@ def test_blocked_numpy_fold_is_bit_exact_with_jvm(spark):
 def test_exact_build_budget_guard(spark, monkeypatch):
     """VERDICT r9 #5: the exact kernel's driver collect is CONDITIONAL.
     It measures the build side with a 1-row aggregate first and refuses
-    past SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB with an UnsupportedError
-    that names the scale path (SPARK_GRAFT_KNN_CANDIDATES=ann), instead
-    of silently materializing an unbounded corpus on the driver."""
+    past _KNN_EXACT_BUILD_BUDGET_BYTES with an UnsupportedError that
+    names the scale path (the registered *_ann operators), instead of
+    silently materializing an unbounded corpus on the driver."""
     import pytest
 
-    from datapipelines_python_spark.operators.workloads import (
-        _exact_pairs_blocked,
-    )
+    import datapipelines_python_spark.operators.knn as knn
     from datapipelines_python_spark.pipeline.common import UnsupportedError
 
     # ~1.6 MB estimated build side vs the 1 MiB budget floor
@@ -256,9 +275,9 @@ def test_exact_build_budget_guard(spark, monkeypatch):
             "transform(sequence(1, 64), i -> CAST(id + i AS float))"
         ).alias("embedding"),
     )
-    monkeypatch.setenv("SPARK_GRAFT_KNN_EXACT_BUILD_BUDGET_MB", "0")
-    with pytest.raises(UnsupportedError, match="KNN_CANDIDATES=ann"):
-        _exact_pairs_blocked(spark, big)
+    monkeypatch.setattr(knn, "_KNN_EXACT_BUILD_BUDGET_BYTES", 1 << 20)
+    with pytest.raises(UnsupportedError, match=r"registered \*_ann operators"):
+        knn._exact_pairs_blocked(spark, big)
 
 
 def test_auto_shard_matches_single_broadcast(spark, monkeypatch):
@@ -270,7 +289,7 @@ def test_auto_shard_matches_single_broadcast(spark, monkeypatch):
     must be BIT-exact with the S=1 single-broadcast kernel: per-pair
     folds don't depend on block membership, and a globally-ranked row
     always survives its own block's top-K."""
-    import datapipelines_python_spark.operators.workloads as wl
+    import datapipelines_python_spark.operators.knn as wl
 
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
     base = sorted(

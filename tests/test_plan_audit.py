@@ -45,7 +45,7 @@ THETA_BNLJ_OK = {
     "llm_similarity_topk", "llm_ann_recall", "ml_ranking_metrics",
     # (round 6: the 13 exact-kNN consumers left this list — their n²
     # theta self-join was replaced by the blocked Arrow-batched exact
-    # top-K in workloads._exact_pairs_blocked, so no BNLJ remains in
+    # top-K in knn._exact_pairs_blocked, so no BNLJ remains in
     # their plans)
     "workload_shapley_attribution",
     # small aggregated frames joined pairwise (group × group)

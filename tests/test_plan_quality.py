@@ -85,6 +85,7 @@ def test_no_operator_collects_to_driver():
     from datapipelines_python_spark.operators import (
         aggregations,
         joins,
+        knn,
         llm,
         projections,
         scans,
@@ -94,7 +95,7 @@ def test_no_operator_collects_to_driver():
     )
 
     for mod in (scans, projections, joins, aggregations, windows, sorts_setops,
-                llm, workloads):
+                llm, workloads, knn):
         # the single sanctioned exception: _exact_pairs_blocked's
         # broadcast-build collect (bounded n·d build side shipped to every
         # task — the same driver hop F.broadcast performs internally);
@@ -547,9 +548,9 @@ def test_stack_generator_is_shuffle_free(spark, registry):
 def test_knn_pair_table_windows_after_single_join(spark, registry):
     # the kNN edge source: one join (candidate stream) under one window;
     # downstream consumers must never see an n^2-row exchange again
-    from datapipelines_python_spark.operators.workloads import _cosine_pairs
+    from datapipelines_python_spark.operators.knn import EXACT
 
-    df = _cosine_pairs(spark, SF_SMOKE)
+    df = EXACT.pairs(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Window") >= 1
     assert "CartesianProduct" not in plan  # join carries the != predicate
