@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
+from datapipelines_python_spark.session import clone_session
+
 TABLES = (
     "region",
     "nation",
@@ -124,9 +126,9 @@ def read_parquet(spark: SparkSession, path: str, nanos_as_long: bool = False) ->
 
     ``nanos_as_long`` infers as if ``spark.sql.legacy.parquet.nanosAsLong``
     were on (TIMESTAMP(NANOS) columns as raw LONG nanos) without setting it
-    on ``spark``: the footer is read on a clone of the session that carries
-    its schema confs with the flag set, and ``spark`` reads with that
-    schema, which it accepts for a NANOS column whatever its own flag."""
+    on ``spark``: the footer is read on a clone of the session with the
+    flag set, and ``spark`` reads with that schema, which it accepts for a
+    NANOS column whatever its own flag."""
     listing = _listing(path)
     confs = {k: spark.conf.get(k) for k in SCHEMA_CONFS}
     if nanos_as_long:
@@ -136,9 +138,7 @@ def read_parquet(spark: SparkSession, path: str, nanos_as_long: bool = False) ->
     if listing is not None and entry is not None and entry[:2] == (values, listing):
         return spark.read.schema(entry[2]).parquet(path)
     if nanos_as_long:
-        infer = spark.newSession()
-        for k, v in confs.items():
-            infer.conf.set(k, v)
+        infer = clone_session(spark, {NANOS_AS_LONG: "true"})
         df = spark.read.schema(infer.read.parquet(path).schema).parquet(path)
     else:
         df = spark.read.parquet(path)

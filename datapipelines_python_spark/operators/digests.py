@@ -15,13 +15,14 @@ this module must stay LAST in ``registry._OPERATOR_MODULES`` so every
 member is registered before the digests compose them.
 
 A digest runs down one path: every member builds and collects its 1-row
-fingerprint in its own ``spark.newSession()`` (same SparkContext, cached
-data and staged fixtures; its own SQL conf and temp views, so members
-that set session conf cannot race each other or the caller), from one
-``ThreadPoolExecutor``. ``threads=1`` is the sequential mode. The rows
-are assembled on the calling session, value-identical to a union of the
-member fingerprints (same plans, same rendering). A stream family passes
-its micro-batch split to each clone as a session conf.
+fingerprint on its own ``session.clone_session`` of the caller (same
+SparkContext, cached data, staged fixtures, runtime confs and stream
+listeners; its own SQL conf and temp views, so members cannot race each
+other or the caller), from one ``ThreadPoolExecutor``. ``threads=1`` is
+the sequential mode. The rows are assembled on the calling session,
+value-identical to a union of the member fingerprints (same plans, same
+rendering). A stream family passes its micro-batch split to each clone
+as a session conf.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from pyspark.sql import types as T
 from datapipelines_python_spark.digest import oracle_member_sql, spark_fingerprint
 from datapipelines_python_spark.digest_snapshot import DIGEST_COLS, DIGEST_FAMILIES
 from datapipelines_python_spark.registry import _REGISTRY, query
-from datapipelines_python_spark.session import tune_session
+from datapipelines_python_spark.session import clone_session, tune_session
 
 # Micro-batch count for digest_stream member execution (VERDICT r7 #4:
 # the digest was 130 s of every sf0.1 profile, most of it per-micro-batch
@@ -82,24 +83,18 @@ def _make_digest(
     def digest_fn(spark: SparkSession, sf: str) -> DataFrame:
         from datapipelines_python_spark.streaming import ops as _sops
 
-        def clone() -> SparkSession:
-            # runtime confs do not cross newSession(): re-tune each clone
-            sess = tune_session(spark.newSession())
-            if split is not None:
-                sess.conf.set(_sops.STREAM_FILES_CONF, str(split))
-            return sess
+        confs = {} if split is None else {_sops.STREAM_FILES_CONF: str(split)}
 
         def one(spec):
-            fp = spark_fingerprint(
-                spec.fn(clone(), sf), spec.name, DIGEST_COLS[spec.name]
-            )
+            member = tune_session(clone_session(spark, confs))
+            fp = spark_fingerprint(spec.fn(member, sf), spec.name, DIGEST_COLS[spec.name])
             return fp.collect()[0]
 
         try:
             if split is not None:
                 # stage the shared ts-ordered events copy once, before
                 # threads could race its write
-                _sops.events_stream(clone(), sf)
+                _sops.events_stream(clone_session(spark, confs), sf)
             with ThreadPoolExecutor(max_workers=threads) as ex:
                 rows = list(ex.map(one, specs))
         finally:

@@ -629,6 +629,14 @@ _ROWS_PER_VECTOR = {"pairs": _KNN_TOPK, "top5": 5, "mutual": 5}
 _KNN_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
 
 
+def drop_knn_cache() -> None:
+    """Unpersist and forget every shared kNN table; the next use rebuilds
+    it."""
+    for df in _KNN_CACHE.values():
+        df.unpersist()
+    _KNN_CACHE.clear()
+
+
 def _top5(pairs: DataFrame) -> DataFrame:
     w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("v"))
     return (

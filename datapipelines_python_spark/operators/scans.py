@@ -25,6 +25,7 @@ from datapipelines_python_spark.catalog import (
 )
 from datapipelines_python_spark.operators._helpers import spread
 from datapipelines_python_spark.registry import query
+from datapipelines_python_spark.session import clone_session
 
 _SCRATCH_BASE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch"
@@ -185,8 +186,12 @@ def scan_stream_files(spark: SparkSession, sf: str) -> DataFrame:
     """File streaming source drained with Trigger.AvailableNow into memory.
 
     Batch-equivalent check: the stream over the same files must produce the
-    full table. (Unbounded variant differs only in the trigger.)
+    full table. (Unbounded variant differs only in the trigger.) The drain
+    runs on a clone, so its sink view stays off the caller's session.
     """
+    from datapipelines_python_spark.streaming.ops import drain_to_memory
+
+    spark = clone_session(spark)
     raw_schema = read_parquet(spark, table_path(sf, "events"), nanos_as_long=True).schema
     # The file stream source wants a directory; glob-filter the sf dir down
     # to the events table file.
@@ -195,14 +200,7 @@ def scan_stream_files(spark: SparkSession, sf: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf.rstrip("/"))
     ).select("event_id", "ts", "user_id", "event_type", "value", "props")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("scan_stream_files_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("scan_stream_files_sink")
+    return drain_to_memory(stream, "scan_stream_files_sink")
 
 
 @query(
@@ -902,12 +900,11 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     # files into about defaultParallelism splits and coalesce can only
     # narrow, so at 2 cores the rewrite would write 2 files, not 4. An open
     # cost of a whole split gives every fragment its own; the conf is set
-    # on a cloned session so the caller's session is untouched.
-    reader = spark.newSession()
-    reader.conf.set(
-        "spark.sql.files.openCostInBytes",
-        spark.conf.get("spark.sql.files.maxPartitionBytes"),
-    )
+    # on a clone so the caller's session is untouched.
+    reader = clone_session(spark, {
+        "spark.sql.files.openCostInBytes":
+            spark.conf.get("spark.sql.files.maxPartitionBytes"),
+    })
     reader.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(
         compact
     )

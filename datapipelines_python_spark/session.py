@@ -60,6 +60,29 @@ def get_spark(
     return spark
 
 
+def clone_session(spark: SparkSession, confs: dict[str, str] | None = None) -> SparkSession:
+    """A copy of ``spark`` with ``confs`` set on the copy only.
+
+    An operator that needs a conf of its own runs on a clone, so another
+    query on the caller's session never sees it. ``cloneSession`` copies
+    every runtime conf, temp view and function of ``spark`` (``newSession``
+    copies none of them) and shares its SparkContext and cached data.
+    Streaming-query listeners are per session, so the caller's are added
+    to the clone: a listener on ``spark`` then sees the micro-batches the
+    clone runs. Each clone that starts a query leaves its listener bus on
+    the SparkContext.
+    """
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in (confs or {}).items():
+        clone.conf.set(k, v)
+    listeners = spark._jsparkSession.streams().listListeners()
+    if len(listeners):
+        streams = clone._jsparkSession.streams()
+        for listener in listeners:
+            streams.addListener(listener)
+    return clone
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-built session.
 

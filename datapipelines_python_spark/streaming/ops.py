@@ -34,6 +34,7 @@ from datapipelines_python_spark.catalog import load_table, read_parquet
 from datapipelines_python_spark.operators._helpers import sql_dsum, task_count
 from datapipelines_python_spark.operators.scans import scratch_dir
 from datapipelines_python_spark.registry import query
+from datapipelines_python_spark.session import clone_session
 
 _DEC = "decimal(38,8)"
 
@@ -43,9 +44,9 @@ _DEC = "decimal(38,8)"
 _STAGED_EVENTS: dict[tuple[str, int], str] = {}
 
 
-# Session conf holding the split. Runtime confs do not cross
-# ``newSession()``, so a cloned session carries its own split without
-# touching the process or any other session.
+# Session conf holding the split. A session clone carries its caller's
+# value (``session.clone_session``), so a clone given its own split
+# leaves the process and every other session alone.
 STREAM_FILES_CONF = "spark.datapipelines.stream.files"
 
 
@@ -164,30 +165,18 @@ def stream_state_partitions(
     return task_count(spark, nbytes, "python_state" if python_state else "jvm_state")
 
 
-class _state_sized:
-    """Context manager: pin spark.sql.shuffle.partitions to the streaming
-    state size for the duration of one streaming query, restore after.
-    Safe because availableNow drains every micro-batch inside
-    awaitTermination and the engine runs one query per session thread."""
-
-    def __init__(
-        self, spark: SparkSession, sf: str, python_state: bool = False
-    ) -> None:
-        self.spark = spark
-        self.sf = sf
-        self.python_state = python_state
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(stream_state_partitions(
-                self.spark, self.sf, python_state=self.python_state
-            )),
-        )
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+def stream_session(
+    spark: SparkSession, sf: str, python_state: bool = False,
+    confs: dict[str, str] | None = None,
+) -> SparkSession:
+    """The clone of ``spark`` one stream operator runs on: its shuffle
+    width is :func:`stream_state_partitions` (plus any ``confs``), and its
+    drains, sink views and query names stay off ``spark``, so a query
+    running beside it on ``spark`` sees none of them."""
+    width = stream_state_partitions(spark, sf, python_state=python_state)
+    return clone_session(
+        spark, {"spark.sql.shuffle.partitions": str(width), **(confs or {})}
+    )
 
 
 # Name prefix of the thread that runs one streaming query (Spark 4.1
@@ -236,27 +225,19 @@ def unload_state_stores(spark: SparkSession) -> None:
         pass
 
 
-def drain_to_memory(
-    df: DataFrame, name: str, output_mode: str = "append", *,
-    sf: str, python_state: bool = False,
-) -> DataFrame:
+def drain_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> DataFrame:
     """Run a streaming plan to completion (AvailableNow) into a memory
-    sink and return the result as a batch DataFrame. ``python_state``
-    marks plans whose stateful operator is per-group Python
-    (applyInPandasWithState / transformWithStateInPandas) — see
-    :func:`stream_state_partitions`."""
-    spark = df.sparkSession
-    spark.catalog.dropTempView(name)  # stale table from a prior run, if any
-    with _state_sized(spark, sf, python_state=python_state):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    sink on ``df``'s session (the operator's fresh clone, so no stale
+    ``name`` view is there) and return the result as a batch DataFrame."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return df.sparkSession.table(name)
 
 
 @query(
@@ -276,6 +257,7 @@ def drain_to_memory(
 def stream_tumbling_agg(spark: SparkSession, sf: str) -> DataFrame:
     """1-hour tumbling window counts/sums by event type; complete-mode
     snapshot equals the batch GROUP BY."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     agg = s.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n_events"),
@@ -287,7 +269,7 @@ def stream_tumbling_agg(spark: SparkSession, sf: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return drain_to_memory(out, "stream_tumbling_agg_sink", "complete", sf=sf)
+    return drain_to_memory(out, "stream_tumbling_agg_sink", "complete")
 
 
 @query(
@@ -314,6 +296,7 @@ def stream_sliding_agg(spark: SparkSession, sf: str) -> DataFrame:
     """1-hour window sliding every 15 minutes: each event lands in four
     windows. Oracle reconstructs the assignment by shifting the 15-minute
     bucket of each event back 0/15/30/45 minutes."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     agg = s.groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type").agg(
         F.count("*").alias("n_events"),
@@ -325,7 +308,7 @@ def stream_sliding_agg(spark: SparkSession, sf: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return drain_to_memory(out, "stream_sliding_agg_sink", "complete", sf=sf)
+    return drain_to_memory(out, "stream_sliding_agg_sink", "complete")
 
 
 @query(
@@ -365,6 +348,7 @@ def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user session windows with a 30-minute gap. Oracle is the
     classic gaps-and-islands formulation; Spark's session_window end is
     last-event + gap, mirrored as MAX(ts) + 30min."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     agg = s.groupBy(F.session_window("ts", "30 minutes"), "user_id").agg(
         F.count("*").alias("n_events"),
@@ -377,7 +361,7 @@ def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return drain_to_memory(out, "stream_session_window_sink", "complete", sf=sf)
+    return drain_to_memory(out, "stream_session_window_sink", "complete")
 
 
 @query(
@@ -402,6 +386,7 @@ def stream_watermark_late(spark: SparkSession, sf: str) -> DataFrame:
     across micro-batches, so the result is deterministic however
     AvailableNow splits the input. Arrival-order-dependent late-record
     *dropping* is unit-tested with hand-built micro-batches in tests/."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     agg = (
         s.withWatermark("ts", "10 minutes")
@@ -409,7 +394,7 @@ def stream_watermark_late(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("window.start").alias("window_start"), "n_events")
     )
-    return drain_to_memory(agg, "stream_watermark_late_sink", "append", sf=sf)
+    return drain_to_memory(agg, "stream_watermark_late_sink", "append")
 
 
 @query(
@@ -423,9 +408,10 @@ def stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     to the key so the result is arrival-order independent. At scale the
     state must be watermark-bounded (``dropDuplicatesWithinWatermark``)
     or it grows without bound."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     dd = s.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
-    return drain_to_memory(dd, "stream_dedup_sink", "append", sf=sf)
+    return drain_to_memory(dd, "stream_dedup_sink", "append")
 
 
 @query(
@@ -461,6 +447,7 @@ def stream_stateful_count(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    spark = stream_session(spark, sf, python_state=True)
     s = events_stream(spark, sf).select("user_id", "props")
 
     def k_int(p) -> int | None:
@@ -517,9 +504,7 @@ def stream_stateful_count(spark: SparkSession, sf: str) -> DataFrame:
     # be negative), so sum_k must be taken FROM that terminal row —
     # max_by, never an independent max (VERDICT r5 #1: independent
     # max(sum_k) returns a stale intermediate under >1 micro-batch).
-    drained = drain_to_memory(
-        out, "stream_stateful_count_sink", "update", sf=sf, python_state=True
-    )
+    drained = drain_to_memory(out, "stream_stateful_count_sink", "update")
     return drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("sum_k", "n_events").alias("sum_k"),
@@ -540,6 +525,7 @@ def stream_foreach_sink(spark: SparkSession, sf: str) -> DataFrame:
     parquet (idempotent by batch id path in production; single dir here),
     then read back — the re-read must equal the batch filter. This is the
     escape hatch for sinks Spark has no connector for."""
+    spark = stream_session(spark, sf)
     out_dir = scratch_dir("stream_foreach_sink")
     ckpt = scratch_dir("stream_foreach_sink_ckpt")
     s = (
@@ -551,14 +537,13 @@ def stream_foreach_sink(spark: SparkSession, sf: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _state_sized(spark, sf):
-        q = (
-            s.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        s.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return spark.read.parquet(out_dir)
 
 
@@ -578,6 +563,7 @@ def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     against the batch customer table (re-read per micro-batch, so slowly
     changing dimensions pick up updates), then aggregated per segment.
     At scale the static side is broadcast into every micro-batch."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     c = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     joined = s.join(c, s.user_id == c.c_custkey)
@@ -585,27 +571,15 @@ def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast(_DEC)).cast("double").alias("sum_value"),
     )
-    return drain_to_memory(agg, "stream_static_join_sink", output_mode="complete", sf=sf)
+    return drain_to_memory(agg, "stream_static_join_sink", output_mode="complete")
 
 
-@query(
-    "stream_stream_join",
-    oracle="""
-        SELECT p.event_id AS purchase_id, v.event_id AS view_id, p.user_id
-        FROM events p JOIN events v
-          ON p.event_type = 'purchase' AND v.event_type = 'view'
-         AND p.user_id = v.user_id
-         AND v.ts >= p.ts - INTERVAL 1 HOUR AND v.ts <= p.ts
-    """,
-    tags=("streaming", "join"),
-)
-def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream ⋈ stream with event-time bounds: every (purchase, view)
-    pair for the same user where the view happened within the hour before
-    the purchase. Watermarks + the time-interval join condition let the
-    engine evict unmatched state — unbounded joins without them grow
-    state forever. Inner-join emission is complete under AvailableNow, so
-    the batch self-join oracle is exact."""
+def _purchase_view_join(spark: SparkSession, sf: str, how: str = "inner") -> DataFrame:
+    """Watermarked purchases (purchase_id, user_id, p_ts) ⋈ views
+    (view_id, v_user, v_ts) of the same user within the hour before the
+    purchase, both sides watermarked 2 hours: the interval join under the
+    four purchase⋈view stream operators. Their oracles start from
+    :data:`_PV_ORACLE`."""
     purchases = (
         events_stream(spark, sf)
         .filter(F.col("event_type") == "purchase")
@@ -626,13 +600,56 @@ def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
         )
         .withWatermark("v_ts", "2 hours")
     )
-    joined = purchases.join(
+    return purchases.join(
         views,
         (F.col("user_id") == F.col("v_user"))
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("v_ts") <= F.col("p_ts")),
-    ).select("purchase_id", "view_id", "user_id")
-    return drain_to_memory(joined, "stream_stream_join_sink", sf=sf)
+        how,
+    )
+
+
+# The DuckDB side of _purchase_view_join: the final watermark base
+# (the minimum of both inputs' max event time) and the two inputs.
+_PV_ORACLE = """
+        WITH mx AS (
+            SELECT LEAST(
+                MAX(CASE WHEN event_type = 'purchase' THEN ts END),
+                MAX(CASE WHEN event_type = 'view' THEN ts END)
+            ) AS wm_base
+            FROM events
+        ),
+        p AS (
+            SELECT event_id AS purchase_id, user_id, ts AS p_ts
+            FROM events WHERE event_type = 'purchase'
+        ),
+        v AS (
+            SELECT event_id AS view_id, user_id AS v_user, ts AS v_ts
+            FROM events WHERE event_type = 'view'
+        ),"""
+
+
+@query(
+    "stream_stream_join",
+    oracle="""
+        SELECT p.event_id AS purchase_id, v.event_id AS view_id, p.user_id
+        FROM events p JOIN events v
+          ON p.event_type = 'purchase' AND v.event_type = 'view'
+         AND p.user_id = v.user_id
+         AND v.ts >= p.ts - INTERVAL 1 HOUR AND v.ts <= p.ts
+    """,
+    tags=("streaming", "join"),
+)
+def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Stream ⋈ stream with event-time bounds: every (purchase, view)
+    pair for the same user where the view happened within the hour before
+    the purchase. Watermarks + the time-interval join condition let the
+    engine evict unmatched state — unbounded joins without them grow
+    state forever. Inner-join emission is complete under AvailableNow, so
+    the batch self-join oracle is exact."""
+    spark = stream_session(spark, sf)
+    joined = _purchase_view_join(spark, sf).select("purchase_id", "view_id", "user_id")
+    return drain_to_memory(joined, "stream_stream_join_sink")
 
 
 @query(
@@ -688,6 +705,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf: str) -> DataFrame:
     (not simply last-event + constant gap — merged ends are a cumulative
     max once gaps vary). Stateful merging is per-user, so state scales
     with active users, same as the fixed-gap variant."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     gap = F.when(
         F.col("event_type") == "purchase", F.lit("60 minutes")
@@ -703,7 +721,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return drain_to_memory(out, "stream_session_dyngap_sink", "complete", sf=sf)
+    return drain_to_memory(out, "stream_session_dyngap_sink", "complete")
 
 
 @query(
@@ -733,6 +751,7 @@ def stream_append_mode_windows(spark: SparkSession, sf: str) -> DataFrame:
     watermark = max event time − 10 min). Append mode is what feeds
     downstream file/table sinks at scale, where updates-in-place don't
     exist and re-emission would mean duplicates."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf).withWatermark("ts", "10 minutes")
     agg = s.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n_events"),
@@ -744,7 +763,7 @@ def stream_append_mode_windows(spark: SparkSession, sf: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return drain_to_memory(out, "stream_append_windows_sink", "append", sf=sf)
+    return drain_to_memory(out, "stream_append_windows_sink", "append")
 
 
 # transformWithStateInPandas spawns a Python state-server worker that
@@ -821,43 +840,30 @@ if _HAS_PROTOBUF:
             def close(self) -> None:
                 pass
 
-        prev_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
+        spark = stream_session(spark, sf, python_state=True, confs={
+            "spark.sql.streaming.stateStore.providerClass":
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider",
+        })
+        s = events_stream(spark, sf).select(
+            "user_id",
+            "event_type",
+            F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("cents"),
         )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        out = s.groupBy("user_id").transformWithStateInPandas(
+            PurchaseStats(),
+            outputStructType=(
+                "user_id long, n_events long, n_purchases long, max_cents long"
+            ),
+            outputMode="update",
+            timeMode="none",
         )
-        try:
-            s = events_stream(spark, sf).select(
-                "user_id",
-                "event_type",
-                F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("cents"),
-            )
-            out = s.groupBy("user_id").transformWithStateInPandas(
-                PurchaseStats(),
-                outputStructType=(
-                    "user_id long, n_events long, n_purchases long, max_cents long"
-                ),
-                outputMode="update",
-                timeMode="none",
-            )
-            drained = drain_to_memory(
-                out, "stream_tws_sink", "update", sf=sf, python_state=True
-            )
-            return drained.groupBy("user_id").agg(
-                F.max("n_events").alias("n_events"),
-                F.max("n_purchases").alias("n_purchases"),
-                F.max("max_cents").alias("max_cents"),
-            )
-        finally:
-            if prev_provider is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev_provider
-                )
+        drained = drain_to_memory(out, "stream_tws_sink", "update")
+        return drained.groupBy("user_id").agg(
+            F.max("n_events").alias("n_events"),
+            F.max("n_purchases").alias("n_purchases"),
+            F.max("max_cents").alias("max_cents"),
+        )
 
 
 @query(
@@ -897,6 +903,7 @@ def stream_tws_fallback(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    spark = stream_session(spark, sf, python_state=True)
     s = events_stream(spark, sf).select(
         "user_id",
         "event_type",
@@ -946,9 +953,7 @@ def stream_tws_fallback(spark: SparkSession, sf: str) -> DataFrame:
     # key, and p/mx are monotone too (counts and a max) — but take them
     # from the terminal row via max_by anyway, the proven finalization
     # shape (VERDICT r5 #1)
-    drained = drain_to_memory(
-        out, "stream_tws_fallback_sink", "update", sf=sf, python_state=True
-    )
+    drained = drain_to_memory(out, "stream_tws_fallback_sink", "update")
     return drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("n_purchases", "n_events").alias("n_purchases"),
@@ -974,11 +979,12 @@ def stream_dedup_within_watermark(spark: SparkSession, sf: str) -> DataFrame:
     dedup that survives week-long streams, with the horizon chosen to
     cover the real duplicate window (late retries, at-least-once
     sources)."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf).withWatermark("ts", "10 minutes")
     dd = s.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "event_type"
     )
-    out = drain_to_memory(dd, "stream_ddww_sink", "append", sf=sf)
+    out = drain_to_memory(dd, "stream_ddww_sink", "append")
     # one row per event_id survives; MIN collapses the oracle identically
     return out.groupBy("event_id").agg(F.min("event_type").alias("event_type"))
 
@@ -1027,6 +1033,7 @@ def stream_chained_window_aggs(spark: SparkSession, sf: str) -> DataFrame:
     watermark. State stays bounded at both grains by the one watermark;
     at scale this halves the job count and the sink traffic of every
     multi-grain rollup pipeline."""
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf).withWatermark("ts", "10 minutes")
     q = s.groupBy(F.window("ts", "15 minutes"), "event_type").agg(
         F.count("*").alias("n")
@@ -1041,27 +1048,12 @@ def stream_chained_window_aggs(spark: SparkSession, sf: str) -> DataFrame:
         "peak_quarter_hour",
         "total_events",
     )
-    return drain_to_memory(out, "stream_chained_sink", "append", sf=sf)
+    return drain_to_memory(out, "stream_chained_sink", "append")
 
 
 @query(
     "stream_stream_left_outer",
-    oracle="""
-        WITH mx AS (
-            SELECT LEAST(
-                MAX(CASE WHEN event_type = 'purchase' THEN ts END),
-                MAX(CASE WHEN event_type = 'view' THEN ts END)
-            ) AS wm_base
-            FROM events
-        ),
-        p AS (
-            SELECT event_id AS purchase_id, user_id, ts AS p_ts
-            FROM events WHERE event_type = 'purchase'
-        ),
-        v AS (
-            SELECT event_id AS view_id, user_id AS v_user, ts AS v_ts
-            FROM events WHERE event_type = 'view'
-        ),
+    oracle=_PV_ORACLE + """
         matched AS (
             SELECT p.purchase_id, v.view_id, p.user_id
             FROM p JOIN v
@@ -1098,54 +1090,16 @@ def stream_stream_left_outer(spark: SparkSession, sf: str) -> DataFrame:
     that horizon (younger unmatched purchases stay in state and are
     correctly NOT emitted). This eviction rule is
     what keeps outer-join state bounded on an unbounded stream."""
-    purchases = (
-        events_stream(spark, sf)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
+    spark = stream_session(spark, sf)
+    joined = _purchase_view_join(spark, sf, "left_outer").select(
+        "purchase_id", "view_id", "user_id"
     )
-    views = (
-        events_stream(spark, sf)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("purchase_id", "view_id", "user_id")
-    return drain_to_memory(joined, "stream_stream_left_outer_sink", sf=sf)
+    return drain_to_memory(joined, "stream_stream_left_outer_sink")
 
 
 @query(
     "stream_stream_full_outer",
-    oracle="""
-        WITH mx AS (
-            SELECT LEAST(
-                MAX(CASE WHEN event_type = 'purchase' THEN ts END),
-                MAX(CASE WHEN event_type = 'view' THEN ts END)
-            ) AS wm_base
-            FROM events
-        ),
-        p AS (
-            SELECT event_id AS purchase_id, user_id, ts AS p_ts
-            FROM events WHERE event_type = 'purchase'
-        ),
-        v AS (
-            SELECT event_id AS view_id, user_id AS v_user, ts AS v_ts
-            FROM events WHERE event_type = 'view'
-        ),
+    oracle=_PV_ORACLE + """
         matched AS (
             SELECT p.purchase_id, v.view_id, p.user_id
             FROM p JOIN v
@@ -1189,58 +1143,18 @@ def stream_stream_full_outer(spark: SparkSession, sf: str) -> DataFrame:
     max event times, as verified for ``stream_stream_left_outer``).
     State for BOTH sides stays bounded — the reason full-outer stream
     joins are even legal under watermarks."""
-    purchases = (
-        events_stream(spark, sf)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    views = (
-        events_stream(spark, sf)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "full_outer",
-    ).select(
+    spark = stream_session(spark, sf)
+    joined = _purchase_view_join(spark, sf, "full_outer").select(
         "purchase_id",
         "view_id",
         F.coalesce(F.col("user_id"), F.col("v_user")).alias("user_id"),
     )
-    return drain_to_memory(joined, "stream_stream_full_outer_sink", sf=sf)
+    return drain_to_memory(joined, "stream_stream_full_outer_sink")
 
 
 @query(
     "stream_join_then_window",
-    oracle="""
-        WITH mx AS (
-            SELECT LEAST(
-                MAX(CASE WHEN event_type = 'purchase' THEN ts END),
-                MAX(CASE WHEN event_type = 'view' THEN ts END)
-            ) AS wm_base
-            FROM events
-        ),
-        p AS (
-            SELECT event_id AS purchase_id, user_id, ts AS p_ts
-            FROM events WHERE event_type = 'purchase'
-        ),
-        v AS (
-            SELECT event_id AS view_id, user_id AS v_user, ts AS v_ts
-            FROM events WHERE event_type = 'view'
-        ),
+    oracle=_PV_ORACLE + """
         joined AS (
             SELECT p.purchase_id, p.p_ts
             FROM p JOIN v
@@ -1274,32 +1188,8 @@ def stream_join_then_window(spark: SparkSession, sf: str) -> DataFrame:
     passes its end — so the oracle keeps exactly the closed hours. The
     dedup-grain twin for agg→agg chaining is
     ``stream_chained_window_aggs``."""
-    purchases = (
-        events_stream(spark, sf)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    views = (
-        events_stream(spark, sf)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-    )
+    spark = stream_session(spark, sf)
+    joined = _purchase_view_join(spark, sf)
     per_purchase = joined.groupBy(
         F.window("p_ts", "1 hour"), "purchase_id"
     ).agg(F.count(F.lit(1)).alias("n_views"))
@@ -1314,7 +1204,7 @@ def stream_join_then_window(spark: SparkSession, sf: str) -> DataFrame:
         "n_purchases",
         "max_views_per_purchase",
     )
-    return drain_to_memory(out, "stream_join_then_window_sink", sf=sf)
+    return drain_to_memory(out, "stream_join_then_window_sink")
 
 
 @query(
@@ -1347,6 +1237,7 @@ def stream_union_sources(spark: SparkSession, sf: str) -> DataFrame:
     complete-mode snapshot equals the batch UNION ALL + GROUP BY. At
     scale each leg scales independently — the union is a no-shuffle
     concatenation of micro-batch partitions."""
+    spark = stream_session(spark, sf)
     clicks = (
         events_stream(spark, sf)
         .filter(F.col("event_type") == "click")
@@ -1368,7 +1259,7 @@ def stream_union_sources(spark: SparkSession, sf: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return drain_to_memory(out, "stream_union_sources_sink", "complete", sf=sf)
+    return drain_to_memory(out, "stream_union_sources_sink", "complete")
 
 
 @query(
@@ -1406,6 +1297,7 @@ def stream_tumbling_topk(spark: SparkSession, sf: str) -> DataFrame:
     formulation the oracle replays."""
     from pyspark.sql.window import Window as W
 
+    spark = stream_session(spark, sf)
     s = events_stream(spark, sf)
     agg = s.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").cast("bigint").alias("n_events"),
@@ -1418,7 +1310,6 @@ def stream_tumbling_topk(spark: SparkSession, sf: str) -> DataFrame:
         ),
         "stream_tumbling_topk_sink",
         "complete",
-        sf=sf,
     )
     w = W.partitionBy("window_start").orderBy(F.desc("n_events"), F.asc("event_type"))
     return (

@@ -45,6 +45,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datapipelines_python_spark import get_registry, get_spark
 from datapipelines_python_spark.canon import canonicalize_df
+from datapipelines_python_spark.operators.knn import drop_knn_cache
 
 # ops whose *point* is the flagged shape: physical cartesian, and the
 # row-at-a-time Python UDF surface (each has Arrow-batched siblings)
@@ -98,7 +99,9 @@ def walk(spark, sf: str, only=None) -> dict:
     """Build each non-digest operator once; per operator record
     ``{"raw_schema", "schema", "plan", "session_diff"}`` (the canonical
     schema, the executed-plan counters, and what the build changed in the
-    caller's conf and environment). Build failures land in ``errors``."""
+    caller's conf and environment). Build failures land in ``errors``.
+    Each build starts without the shared kNN tables, so its counters do
+    not depend on which operators were built before it."""
     reg = {n: s for n, s in get_registry().items() if "digest" not in s.tags}
     if only:
         unknown = set(only) - set(reg)
@@ -109,6 +112,9 @@ def walk(spark, sf: str, only=None) -> dict:
     for name, spec in reg.items():
         if only and name not in only:
             continue
+        # a built cached table prints its executed plan, and its real size
+        # turns the joins above it into broadcasts
+        drop_knn_cache()
         before = _session_state(spark)
         try:
             raw = spec.raw_fn(spark, sf)

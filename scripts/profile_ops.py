@@ -56,14 +56,9 @@ FLOOR_ABS_S = 5.0
 def clear_all_caches(spark) -> None:
     """Drop Spark's cached tables and the shared kNN tables, so the next
     setting recomputes from parquet."""
-    from datapipelines_python_spark.operators.knn import _KNN_CACHE
+    from datapipelines_python_spark.operators.knn import drop_knn_cache
 
-    for df in _KNN_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _KNN_CACHE.clear()
+    drop_knn_cache()
     spark.catalog.clearCache()
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from datapipelines_python_spark import catalog
 from datapipelines_python_spark.catalog import TABLES, load_table, read_parquet, table_path
 from datapipelines_python_spark.pipeline import DataPipeline, FixtureSource, ParquetCache
+from datapipelines_python_spark.session import clone_session
 from tests.conftest import SF_SMOKE
 
 
@@ -74,9 +75,7 @@ def test_overwrites_keep_one_memo_entry(spark, scratch):
 
 def nanos_session(spark):
     """A clone of ``spark`` with ``nanosAsLong`` on; ``spark`` keeps its flag."""
-    clone = spark.newSession()
-    clone.conf.set(catalog.NANOS_AS_LONG, "true")
-    return clone
+    return clone_session(spark, {catalog.NANOS_AS_LONG: "true"})
 
 
 @pytest.mark.parametrize("table", TABLES)

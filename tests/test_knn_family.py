@@ -23,7 +23,13 @@ import inspect
 from pyspark.sql import functions as F
 
 from datapipelines_python_spark.catalog import load_table
-from datapipelines_python_spark.operators.knn import _KNN_CACHE, _KNN_TOPK, ANN, EXACT
+from datapipelines_python_spark.operators.knn import (
+    _KNN_CACHE,
+    _KNN_TOPK,
+    ANN,
+    EXACT,
+    drop_knn_cache,
+)
 
 SF = "/root/testdata/sf0.001"
 KNN_CONSUMERS = (
@@ -61,12 +67,6 @@ def test_knn_twins_share_builder_and_oracle_tail():
     }
 
 
-def _drop_knn_cache():
-    for df in _KNN_CACHE.values():
-        df.unpersist()
-    _KNN_CACHE.clear()
-
-
 def test_cached_tables_narrowed_at_wide_shuffle(spark):
     """Spark keeps a cached plan's output partitioning, so each shared
     table is narrowed before it is persisted: built at 200 shuffle
@@ -75,7 +75,7 @@ def test_cached_tables_narrowed_at_wide_shuffle(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
-        _drop_knn_cache()
+        drop_knn_cache()
         EXACT.mutual(spark, SF)
         ANN.top5(spark, SF)
         assert {k[2:] for k in _KNN_CACHE} == {
@@ -86,7 +86,7 @@ def test_cached_tables_narrowed_at_wide_shuffle(spark):
             assert df.rdd.getNumPartitions() <= cores, key
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _drop_knn_cache()
+        drop_knn_cache()
 
 
 def test_pairs_table_is_topk_bounded(spark):

@@ -27,7 +27,9 @@ from __future__ import annotations
 import pytest
 
 from datapipelines_python_spark import get_registry
-from scripts.audit_plans import CARTESIAN_OK, ROW_PYTHON_OK, build_summary
+from datapipelines_python_spark.operators.knn import ANN, drop_knn_cache
+from scripts.audit_plans import CARTESIAN_OK, ROW_PYTHON_OK, build_summary, walk
+from tests.conftest import SF_SMOKE
 
 # Reviewed theta-BNLJ allowlist (bounded broadcast side for each):
 THETA_BNLJ_OK = {
@@ -115,3 +117,14 @@ def test_builds_leave_the_session_alone(registry_walk):
     changed = {n: r["session_diff"] for n, r in registry_walk["ops"].items()
                if r["session_diff"]}
     assert changed == {}
+
+
+def test_counts_do_not_depend_on_walk_order(spark):
+    # once built, a cached table prints its executed plan and reports its
+    # real size (which turns the joins above it into broadcasts), so an
+    # operator built after its shared table ran would count differently
+    name = "graph_local_clustering_ann"
+    drop_knn_cache()
+    fresh = walk(spark, SF_SMOKE, {name})["ops"][name]["plan"]
+    ANN.top5(spark, SF_SMOKE).count()
+    assert walk(spark, SF_SMOKE, {name})["ops"][name]["plan"] == fresh

@@ -145,8 +145,8 @@ def test_compaction_file_count_is_core_invariant(spark):
     files against the oracle's 4. A session whose parallelism is 2
     emulates that machine."""
     from datapipelines_python_spark import get_registry
+    from datapipelines_python_spark.session import clone_session
 
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+    sess = clone_session(spark, {"spark.sql.leafNodeDefaultParallelism": "2"})
     row = get_registry()["sink_compact_small_files"].fn(sess, SF_SMOKE).collect()[0]
     assert (row.n_files_before, row.n_files_after) == (64, 4)

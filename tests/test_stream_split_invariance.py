@@ -30,6 +30,7 @@ import os
 import duckdb
 import pytest
 
+from datapipelines_python_spark.session import clone_session
 from datapipelines_python_spark.streaming.ops import STREAM_FILES_CONF
 from tests.conftest import SF_SMOKE, norm_rows
 
@@ -59,11 +60,9 @@ def duck_all():
 @pytest.mark.parametrize("op", OPS)
 def test_split_invariant_vs_oracle(spark, duck_all, op, n_files):
     from datapipelines_python_spark import get_registry
-    from datapipelines_python_spark.session import tune_session
 
     spec = get_registry()[op]
-    sess = tune_session(spark.newSession())
-    sess.conf.set(STREAM_FILES_CONF, str(n_files))
+    sess = clone_session(spark, {STREAM_FILES_CONF: str(n_files)})
     got = norm_rows(tuple(r) for r in spec.fn(sess, SF_SMOKE).collect())
     want = norm_rows(duck_all.execute(spec.oracle).fetchall())
     assert got == want, (
@@ -79,8 +78,7 @@ def test_staged_source_is_ts_ordered(spark):
     (NULLs staged first)."""
     from datapipelines_python_spark.streaming.ops import _STAGED_EVENTS, events_stream
 
-    sess = spark.newSession()
-    sess.conf.set(STREAM_FILES_CONF, "4")
+    sess = clone_session(spark, {STREAM_FILES_CONF: "4"})
     events_stream(sess, SF_SMOKE)  # triggers staging
     staged = _STAGED_EVENTS[(SF_SMOKE, 4)]
     parts = sorted(
